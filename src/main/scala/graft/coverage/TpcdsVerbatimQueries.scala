@@ -493,19 +493,14 @@ object TpcdsVerbatimQueries {
         FROM ${tbl("part")}, date_dim WHERE d_dow = 1""")
   }
 
-  /** Names of the derived TPC-DS schema views, in registration order. */
-  private[graft] def viewNames: Seq[String] = viewSql(sparkDialect).map(_._1)
-
-  /** Register the hosted TPC-DS schema as Spark temp views over `dir`. */
-  def register(s: SparkSession, dir: String): Unit = {
-    // fixtures registered under a th_ prefix so the hosted TPC-DS view
-    // names (customer, ...) cannot collide with their own base tables
-    Seq("lineitem", "orders", "part", "supplier", "customer")
-      .foreach(t => Tables.load(s, dir, t).createOrReplaceTempView(s"th_$t"))
-    viewSql(sparkDialect).foreach { case (n, sql) =>
-      s.sql(s"CREATE OR REPLACE TEMPORARY VIEW $n AS $sql")
-    }
-  }
+  /** Register the hosted TPC-DS schema as Spark temp views over `dir`
+    * (once per session, see [[Tables.bind]]). Fixtures are bound under a
+    * th_ prefix so the hosted TPC-DS view names (customer, ...) cannot
+    * collide with their own base tables. */
+  def register(s: SparkSession, dir: String): Unit =
+    Tables.bind(s, "tpcds", dir,
+      Seq("lineitem", "orders", "part", "supplier", "customer").map(t => s"th_$t" -> t),
+      viewSql(sparkDialect))
 
   /** DuckDB oracle = the same verbatim text with the schema CTEs
     * prepended (merging into the query's own WITH list when present).

@@ -107,16 +107,13 @@ object TpchVerbatimQueries {
         GROUP BY l_partkey, l_suppkey""")
   }
 
-  /** Register the adapted TPC-H schema as Spark temp views over `dir`
-    * (fixtures under a tv_ prefix so the hosted names cannot collide with
-    * their own base tables — the th_ recipe). */
-  def register(s: SparkSession, dir: String): Unit = {
-    Seq("lineitem", "supplier", "nation", "part")
-      .foreach(t => Tables.load(s, dir, t).createOrReplaceTempView(s"tv_$t"))
-    viewSql(sparkDialect).foreach { case (n, sql) =>
-      s.sql(s"CREATE OR REPLACE TEMPORARY VIEW $n AS $sql")
-    }
-  }
+  /** Register the adapted TPC-H schema as Spark temp views over `dir`,
+    * once per session ([[Tables.bind]]); fixtures under a tv_ prefix so the
+    * hosted names cannot collide with their own base tables — the th_ recipe. */
+  def register(s: SparkSession, dir: String): Unit =
+    Tables.bind(s, "tpch", dir,
+      Seq("lineitem", "supplier", "nation", "part").map(t => s"tv_$t" -> t),
+      viewSql(sparkDialect))
 
   /** DuckDB oracle = the same verbatim text with the schema CTEs
     * prepended; backticks re-quoted for DuckDB only (q11's `value`). */

@@ -73,20 +73,14 @@ object StreamOps {
   }
 
   def readTable(s: SparkSession, dir: String, table: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val path = s"$dir/$table.parquet"
     val schema = s.read.parquet(path).schema
     val stream = s.readStream.schema(schema).parquet(fileAsDir(path))
-    // events.ts physical type varies by fixture generation — normalize to
-    // session-TZ TimestampType by the schema actually read (see Tables.load)
-    if (table == "events") {
-      import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
-      schema("ts").dataType match {
-        case LongType         => stream.withColumn("ts", expr("timestamp_micros(ts DIV 1000)"))
-        case TimestampNTZType => stream.withColumn("ts", col("ts").cast(TimestampType))
-        case _                => stream
-      }
-    } else stream
+    // events.ts reads as TIMESTAMP_NTZ — relabel to the session-TZ
+    // TimestampType the corpus expects (see Tables.load)
+    if (table == "events" && schema("ts").dataType == org.apache.spark.sql.types.TimestampNTZType)
+      stream.withColumn("ts", col("ts").cast(org.apache.spark.sql.types.TimestampType))
+    else stream
   }
 
   /** Run a streaming DataFrame to completion into a memory sink; return the

@@ -115,18 +115,15 @@ object HostileGen {
       .withColumn("l_tax",
         when(col("l_orderkey") % 101 === 0, lit(0.0)).otherwise(col("l_tax"))), "lineitem")
 
-    // events.ts physical type varies by fixture generation — mutate via a
-    // same-type value so the schema byte-layout is preserved. Events get
-    // epoch+1s, NOT exact epoch: Spark's streaming watermark initializes
-    // at 0ms and treats rows AT the watermark as late, so a ts of exactly
-    // 1970-01-01T00:00:00 is born-late in every stateful operator (a real
-    // engine-model boundary, documented in FIXTURES.md) — epoch+1s keeps
-    // the boundary stress while staying inside the processable domain.
+    // mutate events.ts via a same-type value so the schema byte-layout is
+    // preserved. Events get epoch+1s, NOT exact epoch: Spark's streaming
+    // watermark initializes at 0ms and treats rows AT the watermark as
+    // late, so a ts of exactly 1970-01-01T00:00:00 is born-late in every
+    // stateful operator (a real engine-model boundary, documented in
+    // FIXTURES.md) — epoch+1s keeps the boundary stress while staying
+    // inside the processable domain.
     val ev = t("events")
-    val epochTs = ev.schema("ts").dataType match {
-      case org.apache.spark.sql.types.LongType => lit(1000000000L) // 1s in ns
-      case dt => expr("TIMESTAMP '1970-01-01 00:00:01'").cast(dt)
-    }
+    val epochTs = expr("TIMESTAMP '1970-01-01 00:00:01'").cast(ev.schema("ts").dataType)
     // r14 adversarial-streaming plants (VERDICT r13 #6), all
     // oracle-neutral (DuckDB reads the same mutated file):
     //  - ONE HOT KEY: half of all rows collapse onto user_id 7 — keyed

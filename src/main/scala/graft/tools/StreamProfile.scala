@@ -3,6 +3,7 @@ package graft.tools
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.StreamingQueryListener
 import scala.collection.mutable.ArrayBuffer
+import scala.util.control.NonFatal
 
 /** Streaming fixed-cost attribution (VERDICT r15 #7, guide §1): one
   * profiled run over the `q_stream_*` family that splits each query's
@@ -16,6 +17,7 @@ import scala.collection.mutable.ArrayBuffer
   * Prints one line per query:
   *   <name> wall=..s batches=N trigger=..s plan=..s walCommit=..s
   *   offsetCommit=..s addBatch=..s stateCommit=..s outside=..s
+  * (or `<name> FAILED: <error>` when the query throws)
   * where `outside` = wall - trigger (query start/stop, checkpoint dir
   * setup, memory-sink readback — cost the progress events cannot see) and
   * stateCommit is summed over state operators (a subset of addBatch).
@@ -60,18 +62,23 @@ object StreamProfile {
       graft.SparkEntry.queries.get(name).foreach { fn =>
         drain(); val mark = events.synchronized(events.size)
         val t0 = System.nanoTime()
-        try { fn(spark, sfDir).count() } catch { case _: Throwable => () }
+        val error = try { fn(spark, sfDir).count(); None } catch { case NonFatal(e) => Some(e) }
         val wall = (System.nanoTime() - t0) / 1e9
         drain()
-        val evs = events.synchronized(events.slice(mark, events.size).toVector)
-        def dur(k: String) = evs.map(p => Option(p.durationMs.get(k)).fold(0L)(_.longValue)).sum / 1e3
-        val stateCommit = evs.flatMap(_.stateOperators.toSeq).map(_.commitTimeMs).sum / 1e3
-        val trigger = dur("triggerExecution")
-        println(f"$name%-36s wall=$wall%6.2fs batches=${evs.size}%3d " +
-          f"trigger=$trigger%6.2fs plan=${dur("queryPlanning")}%5.2fs " +
-          f"walCommit=${dur("walCommit")}%5.2fs offsetCommit=${dur("commitOffsets")}%5.2fs " +
-          f"addBatch=${dur("addBatch")}%6.2fs stateCommit=$stateCommit%5.2fs " +
-          f"outside=${wall - trigger}%6.2fs")
+        // a query that throws is reported as failed, never as a profile
+        error match {
+          case Some(e) => println(f"$name%-36s FAILED: $e")
+          case None =>
+            val evs = events.synchronized(events.slice(mark, events.size).toVector)
+            def dur(k: String) = evs.map(p => Option(p.durationMs.get(k)).fold(0L)(_.longValue)).sum / 1e3
+            val stateCommit = evs.flatMap(_.stateOperators.toSeq).map(_.commitTimeMs).sum / 1e3
+            val trigger = dur("triggerExecution")
+            println(f"$name%-36s wall=$wall%6.2fs batches=${evs.size}%3d " +
+              f"trigger=$trigger%6.2fs plan=${dur("queryPlanning")}%5.2fs " +
+              f"walCommit=${dur("walCommit")}%5.2fs offsetCommit=${dur("commitOffsets")}%5.2fs " +
+              f"addBatch=${dur("addBatch")}%6.2fs stateCommit=$stateCommit%5.2fs " +
+              f"outside=${wall - trigger}%6.2fs")
+        }
       }
     }
     spark.stop()

@@ -5,8 +5,8 @@
 # out 4-26x slower than the same queries in BENCH_r14_sf1.json while the
 # suite median was 0.923 (faster). This wrapper (a) waits for a stable
 # window, (b) runs the paired bench, and (c) POST-checks both host
-# stability and the per-query distribution vs the r14 record, so a
-# mid-run degradation can't ship silently again.
+# stability and the per-query distribution vs the $REF record (default
+# BENCH_r14_sf1.json), so a mid-run degradation can't ship silently again.
 # Usage: tools/run_sf1_guarded.sh [attempts] [sleep_s] [out.json] [ref.json]
 # (r16: output record name and the distribution-check reference are
 # arguments so each round ships its own record without editing the guard;
@@ -31,15 +31,15 @@ for i in $(seq 1 "$ATTEMPTS"); do
     continue
   fi
   tools/sf1_report.py /tmp/sf01_full.json /tmp/sf1_full.json /tmp/BENCH_sf1_candidate.json
-  # distribution check vs the r14 record: the p90 of per-query sf1-second
-  # ratios r15/r14 must stay under 2.0 (the degraded run's cluster was
-  # 4-26x; normal host drift is well under 1.5).
+  # distribution check vs the $REF record: the p90 of per-query sf1-second
+  # ratios candidate/$REF must stay under 2.0 (the degraded run's cluster
+  # was 4-26x; normal host drift is well under 1.5).
   REF="$REF" python3 - <<'PYEOF'
 import json, os, statistics, sys
 cand = json.load(open('/tmp/BENCH_sf1_candidate.json'))
-r14 = json.load(open(os.environ.get('REF', 'BENCH_r14_sf1.json')))
-common = [q for q in cand['sf1'] if q in r14['sf1'] and r14['sf1'][q] > 0.1]
-rel = sorted(cand['sf1'][q] / r14['sf1'][q] for q in common)
+ref = json.load(open(os.environ.get('REF', 'BENCH_r14_sf1.json')))
+common = [q for q in cand['sf1'] if q in ref['sf1'] and ref['sf1'][q] > 0.1]
+rel = sorted(cand['sf1'][q] / ref['sf1'][q] for q in common)
 p90 = rel[int(len(rel) * 0.9)]
 med = statistics.median(rel)
 print(f"vs {os.environ.get('REF','BENCH_r14_sf1.json')}: median {med:.3f} p90 {p90:.2f} worst {rel[-1]:.2f}", file=sys.stderr)
