@@ -1,9 +1,26 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import java.nio.file.{Files, Paths}
+import scala.util.control.NonFatal
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
+  /** Write one query's result to `$out/$name` as parquet. A failing query
+    * must never leave an earlier run's result behind to be compared: its
+    * dir is emptied and holds only a `_FAILED` marker with the error text,
+    * which tools/check.py reports as a FAIL. */
+  def dump(out: String, name: String)(result: => DataFrame): Unit = {
+    val dir = Paths.get(out, name)
+    // single-file: one part file per query result (fixture scale)
+    try result.coalesce(1).write.mode("overwrite").parquet(dir.toString)
+    catch { case NonFatal(e) =>
+      System.err.println(s"[verify] $name failed: ${e.getMessage}")
+      graft.streaming.StreamOps.wipeDir(dir.toString)
+      Files.createDirectories(dir)
+      Files.writeString(dir.resolve("_FAILED"), e.toString)
+    }
+  }
+
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -25,14 +42,7 @@ object Verify {
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").map(_.trim).toSet)
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
-      // single-file: the driver's per-query dump contract (fixture scale)
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-      }
-    }
+      .foreach { case (name, fn) => dump(outDir, name)(fn(spark, sfDir)) }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.
@@ -64,14 +74,7 @@ object Verify {
       val excluded = coverage.TpcdsVerbatim2Queries.h1Blocked ++
         coverage.TpcdsVerbatim2Queries.tolBlocked
       excluded.filter { case (name, _) => only.forall(_.contains(name)) }
-        .foreach { case (name, qq) =>
-          // single-file: same dump contract as the gated corpus above
-          try qq.run(spark, sfDir).coalesce(1).write.mode("overwrite")
-            .parquet(s"$exDir/$name")
-          catch { case e: Throwable =>
-            System.err.println(s"[verify] excluded $name failed: ${e.getMessage}")
-          }
-        }
+        .foreach { case (name, qq) => dump(exDir, name)(qq.run(spark, sfDir)) }
       // the excluded json is filtered by SPARK_GRAFT_ONLY exactly like the
       // dumps above — check.py iterates its KEYS, so an unfiltered json on
       // a subset run would red every name whose dump was skipped (unlike

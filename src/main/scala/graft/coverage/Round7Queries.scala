@@ -1008,20 +1008,22 @@ object Round7Queries {
   val qStreamRateSource: Q = Q(
     run = (s, _) => {
       val name = s"graft_rate_${obsSeq.incrementAndGet()}"
-      val q = s.readStream.format("rate")
-        .option("rowsPerSecond", "5000").option("numPartitions", "2").load()
-        .writeStream.format("memory").queryName(name)
-        .outputMode(OutputMode.Append()).start()
-      try {
-        val deadline = System.currentTimeMillis() + 30000
-        var mx = -1L
-        while (mx < 999L && System.currentTimeMillis() < deadline) {
-          q.processAllAvailable()
-          val r = s.table(name).agg(max(col("value"))).head()
-          mx = if (r.isNullAt(0)) -1L else r.getLong(0)
-          if (mx < 999L) Thread.sleep(50)
-        }
-      } finally q.stop()
+      StreamOps.withStreamingConf(s) {
+        val q = s.readStream.format("rate")
+          .option("rowsPerSecond", "5000").option("numPartitions", "2").load()
+          .writeStream.format("memory").queryName(name)
+          .outputMode(OutputMode.Append()).start()
+        try {
+          val deadline = System.currentTimeMillis() + 30000
+          var mx = -1L
+          while (mx < 999L && System.currentTimeMillis() < deadline) {
+            q.processAllAvailable()
+            val r = s.table(name).agg(max(col("value"))).head()
+            mx = if (r.isNullAt(0)) -1L else r.getLong(0)
+            if (mx < 999L) Thread.sleep(50)
+          }
+        } finally q.stop()
+      }
       val out = s.table(name).filter(col("value") < 1000)
         .groupBy((col("value") % 10).as("bucket"))
         .agg(count(lit(1)).as("cnt"), min(col("value")).as("vmin"),
@@ -1072,18 +1074,20 @@ object Round7Queries {
       val counts = env.socketTextStream("localhost", server.getLocalPort)
         .flatMap(_.split(" ").toSeq).ds
         .groupBy(col("value").as("word")).agg(count(lit(1)).as("cnt"))
-      val q = counts.writeStream.format("memory").queryName(name)
-        .outputMode(OutputMode.Complete()).start()
-      try {
-        val deadline = System.currentTimeMillis() + 30000
-        var total = 0L
-        while (total < expected && System.currentTimeMillis() < deadline) {
-          q.processAllAvailable()
-          val r = s.table(name).agg(sum(col("cnt"))).head()
-          total = if (r.isNullAt(0)) 0L else r.getLong(0)
-          if (total < expected) Thread.sleep(50)
-        }
-      } finally { q.stop(); server.close() }
+      StreamOps.withStreamingConf(s) {
+        val q = counts.writeStream.format("memory").queryName(name)
+          .outputMode(OutputMode.Complete()).start()
+        try {
+          val deadline = System.currentTimeMillis() + 30000
+          var total = 0L
+          while (total < expected && System.currentTimeMillis() < deadline) {
+            q.processAllAvailable()
+            val r = s.table(name).agg(sum(col("cnt"))).head()
+            total = if (r.isNullAt(0)) 0L else r.getLong(0)
+            if (total < expected) Thread.sleep(50)
+          }
+        } finally { q.stop(); server.close() }
+      }
       val out = s.table(name).orderBy(col("word")).collect()
       s.catalog.dropTempView(name)
       s.createDataFrame(s.sparkContext.parallelize(out.toIndexedSeq, 1),

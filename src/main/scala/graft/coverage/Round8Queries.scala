@@ -55,9 +55,7 @@ object Round8Queries {
       addBatch(base, src, "b0", orders.filter(col("k") % 3 === 0))
       addBatch(base, src, "b1", orders.filter(col("k") % 3 === 1))
       val schema = orders.schema
-      val prev = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      def runOnce(tbl: String): (DataFrame, Long) = {
+      def runOnce(tbl: String): (DataFrame, Long) = StreamOps.withStreamingConf(s) {
         val q = s.readStream.schema(schema)
           .option("maxFilesPerTrigger", "1").parquet(src)
           .groupBy(col("pri"))
@@ -69,20 +67,18 @@ object Round8Queries {
         q.awaitTermination()
         (s.table(tbl), q.recentProgress.map(_.numInputRows).sum)
       }
-      try {
-        val n = seq.incrementAndGet()
-        val total = orders.count()
-        val b2Rows = orders.filter(col("k") % 3 === 2).count()
-        val (partial, _) = runOnce(s"rec_a_$n") // consumes b0+b1, then STOPS
-        val seen1 = partial.agg(sum(col("n"))).collect()(0).getLong(0)
-        require(seen1 == total - b2Rows,
-          s"pre-kill run must cover exactly b0+b1 ($seen1 vs ${total - b2Rows})")
-        addBatch(base, src, "b2", orders.filter(col("k") % 3 === 2))
-        val (fin, read2) = runOnce(s"rec_b_$n") // restart from the checkpoint
-        require(read2 == b2Rows,
-          s"restart must read ONLY the new batch from restored offsets ($read2 vs $b2Rows)")
-        fin.orderBy(col("pri"))
-      } finally s.conf.set("spark.sql.shuffle.partitions", prev)
+      val n = seq.incrementAndGet()
+      val total = orders.count()
+      val b2Rows = orders.filter(col("k") % 3 === 2).count()
+      val (partial, _) = runOnce(s"rec_a_$n") // consumes b0+b1, then STOPS
+      val seen1 = partial.agg(sum(col("n"))).collect()(0).getLong(0)
+      require(seen1 == total - b2Rows,
+        s"pre-kill run must cover exactly b0+b1 ($seen1 vs ${total - b2Rows})")
+      addBatch(base, src, "b2", orders.filter(col("k") % 3 === 2))
+      val (fin, read2) = runOnce(s"rec_b_$n") // restart from the checkpoint
+      require(read2 == b2Rows,
+        s"restart must read ONLY the new batch from restored offsets ($read2 vs $b2Rows)")
+      fin.orderBy(col("pri"))
     },
     oracle = Some("""
       SELECT o_orderpriority AS pri, COUNT(*) AS n,
@@ -126,15 +122,13 @@ object Round8Queries {
       addBatch(base, srcA, "b0", a1)
       addBatch(base, srcB, "b0", b1)
       val schema = a1.schema
-      val prev = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
       // parquet sink, not memory: the file sink's commit log is what makes
       // the run-2 restart from the same checkpoint legal (memory sink
       // refuses recovery in append mode)
       def fire(): DataFrame = {
         def src(p: String) = s.readStream.schema(schema)
           .option("maxFilesPerTrigger", "1").parquet(p)
-        val q = src(srcA).unionByName(src(srcB))
+        StreamOps.withStreamingConf(s)(src(srcA).unionByName(src(srcB))
           .withWatermark("ts", "10 minutes")
           .groupBy(col("src"), window(col("ts"), "15 minutes"))
           .agg(count(lit(1)).as("n"), expr("CAST(SUM(k) AS BIGINT)").as("sum_k"))
@@ -146,25 +140,23 @@ object Round8Queries {
           .outputMode(org.apache.spark.sql.streaming.OutputMode.Append())
           .option("checkpointLocation", ckpt)
           .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
+          .awaitTermination())
         s.read.parquet(out)
       }
-      try {
-        // snapshot run 1's emissions driver-side (a handful of window rows)
-        // so the post-restart diff is against a STABLE set, not a re-read
-        val rows1 = fire().collect().toSeq
-        val fired1 = s.createDataFrame(
-          new java.util.ArrayList[org.apache.spark.sql.Row](
-            scala.jdk.CollectionConverters.SeqHasAsJava(rows1).asJava),
-          s.read.parquet(out).schema).withColumn("fired_run", lit(1L))
-        // B goes IDLE: only A receives run-2 data
-        addBatch(base, srcA, "b1", a2)
-        val fired2 = fire().exceptAll(fired1.drop("fired_run"))
-          .withColumn("fired_run", lit(2L))
-        require(fired2.filter(col("src") === "A").count() > 0,
-          "idle B must not stall A's hour-2 window finalization")
-        fired1.unionByName(fired2).orderBy(col("src"), col("win_start_min"))
-      } finally s.conf.set("spark.sql.shuffle.partitions", prev)
+      // snapshot run 1's emissions driver-side (a handful of window rows)
+      // so the post-restart diff is against a STABLE set, not a re-read
+      val rows1 = fire().collect().toSeq
+      val fired1 = s.createDataFrame(
+        new java.util.ArrayList[org.apache.spark.sql.Row](
+          scala.jdk.CollectionConverters.SeqHasAsJava(rows1).asJava),
+        s.read.parquet(out).schema).withColumn("fired_run", lit(1L))
+      // B goes IDLE: only A receives run-2 data
+      addBatch(base, srcA, "b1", a2)
+      val fired2 = fire().exceptAll(fired1.drop("fired_run"))
+        .withColumn("fired_run", lit(2L))
+      require(fired2.filter(col("src") === "A").count() > 0,
+        "idle B must not stall A's hour-2 window finalization")
+      fired1.unionByName(fired2).orderBy(col("src"), col("win_start_min"))
     },
     oracle = Some("""
       WITH pts AS (
@@ -325,9 +317,7 @@ object Round8Queries {
       addBatch(base, src, "b0", orders.filter(col("k") % 4 === 0))
       addBatch(base, src, "b1", orders.filter(col("k") % 4 === 1))
       val schema = orders.schema
-      val prev = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      def runOnce(ckpt: String, tbl: String): (DataFrame, Long) = {
+      def runOnce(ckpt: String, tbl: String): (DataFrame, Long) = StreamOps.withStreamingConf(s) {
         val q = s.readStream.schema(schema)
           .option("maxFilesPerTrigger", "1").parquet(src)
           .groupBy(col("pri"))
@@ -353,22 +343,20 @@ object Round8Queries {
           }
         } finally w.close()
       }
-      try {
-        val n = seq.incrementAndGet()
-        val rows = (b: Int) => orders.filter(col("k") % 4 === b).count()
-        runOnce(ckptA, s"svp_base_$n") // quarters 0+1, then STOP (quiesce)
-        copyDir(ckptA, ckptB)          // THE SAVEPOINT
-        addBatch(base, src, "b2", orders.filter(col("k") % 4 === 2))
-        val (mainFin, readMain) = runOnce(ckptA, s"svp_main_$n")
-        require(readMain == rows(2), s"main resume must read only b2 ($readMain)")
-        addBatch(base, src, "b3", orders.filter(col("k") % 4 === 3))
-        val (forkFin, readFork) = runOnce(ckptB, s"svp_fork_$n")
-        require(readFork == rows(2) + rows(3),
-          s"fork from the savepoint must read b2+b3 ($readFork)")
-        mainFin.select(lit("main").as("leg"), col("pri"), col("n"), col("sum_cents"))
-          .unionByName(forkFin.select(lit("fork").as("leg"), col("pri"), col("n"), col("sum_cents")))
-          .orderBy(col("leg"), col("pri"))
-      } finally s.conf.set("spark.sql.shuffle.partitions", prev)
+      val n = seq.incrementAndGet()
+      val rows = (b: Int) => orders.filter(col("k") % 4 === b).count()
+      runOnce(ckptA, s"svp_base_$n") // quarters 0+1, then STOP (quiesce)
+      copyDir(ckptA, ckptB)          // THE SAVEPOINT
+      addBatch(base, src, "b2", orders.filter(col("k") % 4 === 2))
+      val (mainFin, readMain) = runOnce(ckptA, s"svp_main_$n")
+      require(readMain == rows(2), s"main resume must read only b2 ($readMain)")
+      addBatch(base, src, "b3", orders.filter(col("k") % 4 === 3))
+      val (forkFin, readFork) = runOnce(ckptB, s"svp_fork_$n")
+      require(readFork == rows(2) + rows(3),
+        s"fork from the savepoint must read b2+b3 ($readFork)")
+      mainFin.select(lit("main").as("leg"), col("pri"), col("n"), col("sum_cents"))
+        .unionByName(forkFin.select(lit("fork").as("leg"), col("pri"), col("n"), col("sum_cents")))
+        .orderBy(col("leg"), col("pri"))
     },
     oracle = Some("""
       SELECT 'main' AS leg, o_orderpriority AS pri, COUNT(*) AS n,

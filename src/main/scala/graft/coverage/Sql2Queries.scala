@@ -360,12 +360,12 @@ object Sql2Queries {
         Tables.load(s, dir, "events").count() / 3)
       val src = graft.streaming.StreamOps.readTable(s, dir, "events")
         .select(col("event_id"), col("user_id"), col("event_type"), col("value"))
-      val q = src.writeStream.format("parquet")
+      graft.streaming.StreamOps.withStreamingConf(s)(src.writeStream.format("parquet")
         .option("path", s"$scratch/out")
         .option("checkpointLocation", s"$scratch/ckpt")
         .option("maxRecordsPerFile", rollAt.toString)
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-      q.awaitTermination()
+        .awaitTermination())
       val files = new java.io.File(s"$scratch/out").listFiles()
         .count(_.getName.endsWith(".parquet"))
       require(files > 1, s"rolling policy must split the sink into >1 part file, got $files")
@@ -395,12 +395,12 @@ object Sql2Queries {
       graft.streaming.StreamOps.wipeDir(scratch)
       val src = graft.streaming.StreamOps.readTable(s, dir, "events")
       val agg = src.groupBy(col("event_type")).count()
-      val q = agg.writeStream.format("memory")
+      graft.streaming.StreamOps.withStreamingConf(s)(agg.writeStream.format("memory")
         .queryName(s"qstate_sink_${san(dir)}")
         .outputMode("complete")
         .option("checkpointLocation", s"$scratch/ckpt")
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-      q.awaitTermination()
+        .awaitTermination())
       val st = graft.streaming.StreamOps.readState(s, s"$scratch/ckpt")
       // the aggregation buffer's field name is internal — take the count
       // buffer positionally (last field), like the reference's state

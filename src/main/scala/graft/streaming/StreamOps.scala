@@ -2,6 +2,7 @@ package graft.streaming
 
 import graft.operators.Cep
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
 
@@ -20,10 +21,12 @@ object StreamOps {
   private val counter = new java.util.concurrent.atomic.AtomicInteger(0)
 
   /** Scratch root for harness artifacts (staged batches, checkpoints,
-    * symlink dirs). State-store commits fsync once per partition per
-    * micro-batch — on tmpfs that is a no-op, on ext4 it is the dominant
-    * fixed cost of every streaming query — so prefer /dev/shm when present
-    * (production would point this at fast local SSD via spark.local.dir). */
+    * symlink dirs). Every micro-batch writes a few small checkpoint files
+    * (offset, commit and source logs, one state-store delta per shuffle
+    * partition). Their measured cost was Hadoop's per-file subprocesses,
+    * which `withStreamingConf` removes, not the disk; tmpfs still keeps
+    * them off the disk, so prefer /dev/shm when present (production would
+    * point this at fast local SSD via spark.local.dir). */
   val scratchRoot: String =
     if (new java.io.File("/dev/shm").isDirectory) "/dev/shm/graft" else "/tmp/graft"
 
@@ -103,28 +106,49 @@ object StreamOps {
       while (liveMemTables.size > keep) s.catalog.dropTempView(liveMemTables.dequeue())
     }
     val name = s"graft_mem_${counter.incrementAndGet()}"
-    // stateful streaming cost scales with state-store instances (one per
-    // shuffle partition, committed every batch): 4 partitions halves the
-    // fixed per-query harness cost vs 8 (measured; 2 is no better) while
-    // the fixture volume stays far below per-partition limits
-    val prev = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", sys.props.getOrElse("graft.stream.parts", "4"))
     // per-JVM-unique dir, wiped before AND after the run: a stale checkpoint
     // from a crashed earlier JVM would otherwise resume at its old offsets
     // and silently skip this run's staged batches
     val ckpt = s"$scratchRoot/ckpt/${ProcessHandle.current().pid()}/$name"
     wipe(ckpt)
-    try {
-      val q = df.writeStream.format("memory").queryName(name)
+    try withStreamingConf(s) {
+      df.writeStream.format("memory").queryName(name)
         .option("checkpointLocation", ckpt)
         .outputMode(mode).trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-    } finally {
-      s.conf.set("spark.sql.shuffle.partitions", prev)
-      wipe(ckpt) // the memory table is already materialized; drop state/commit logs
-    }
+        .awaitTermination()
+    } finally wipe(ckpt) // the memory table is already materialized; drop state/commit logs
     liveMemTables.synchronized { liveMemTables.enqueue(name) }
     s.table(name)
+  }
+
+  /** Run `body` — the start and await of one engine streaming query — under
+    * the two session settings every engine query uses, then restore their
+    * previous values (also when `body` throws). Every `DataStreamWriter.start()`
+    * of the engine runs inside this helper.
+    *  - `spark.sql.shuffle.partitions` = `graft.stream.parts` (default 4).
+    *    Each shuffle partition is one state-store instance that writes its
+    *    delta file every micro-batch, so the per-batch checkpoint cost
+    *    grows with the partition count; the fixture volume stays far below
+    *    per-partition limits at 4.
+    *  - Spark's FileSystem-based checkpoint manager instead of the
+    *    FileContext one. Without libhadoop, a FileContext rename of a local
+    *    checkpoint file forks `readlink` 8 times; the FileSystem manager
+    *    renames with a plain `File.renameTo`. Writes still go through the
+    *    checksummed LocalFileSystem, so Hadoop `.crc` files and Spark's
+    *    checkpoint-file checksums stay. The engine's checkpoints are all
+    *    local (under `scratchRoot` or the JVM temp dir). */
+  def withStreamingConf[T](s: SparkSession)(body: => T): T = {
+    val settings = Seq(
+      "spark.sql.shuffle.partitions" -> sys.props.getOrElse("graft.stream.parts", "4"),
+      "spark.sql.streaming.checkpointFileManagerClass" ->
+        classOf[FileSystemBasedCheckpointFileManager].getName)
+    val prev = settings.map { case (k, _) => k -> s.conf.getOption(k) }
+    settings.foreach { case (k, v) => s.conf.set(k, v) }
+    try body
+    finally prev.foreach {
+      case (k, Some(v)) => s.conf.set(k, v)
+      case (k, None) => s.conf.unset(k)
+    }
   }
 
   /** Queryable-state analog — ref flink-queryable-state
@@ -1300,7 +1324,7 @@ object StreamOps {
     wipe(outDir)
     var wmSec = Long.MinValue
     val committed = scala.collection.mutable.Set[Long]()
-    val q = src.writeStream
+    withStreamingConf(s)(src.writeStream
       .foreachBatch { (df: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
         val withP = df.withColumn("p_bucket",
           (floor(unix_timestamp(col("ts").cast("timestamp")) / bucketSec) * bucketSec).cast("long"))
@@ -1340,7 +1364,7 @@ object StreamOps {
         wipe(c); c
       })
       .start()
-    q.awaitTermination()
+      .awaitTermination())
     val dirs = committed.toSeq.sorted.map(b => s"$outDir/p_bucket=$b")
     if (dirs.isEmpty) s.emptyDataFrame
     else s.read.option("basePath", outDir).parquet(dirs: _*)

@@ -1,0 +1,128 @@
+package graft
+
+import graft.streaming.StreamOps
+import java.nio.file.{Files, Paths, StandardCopyOption}
+import jdk.jfr.Recording
+import jdk.jfr.consumer.RecordingFile
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.{OutputMode, Trigger}
+import scala.jdk.CollectionConverters._
+
+/** Engine streaming queries write their checkpoints through Spark's
+  * FileSystem checkpoint manager (`StreamOps.withStreamingConf`): no
+  * Hadoop `readlink` subprocess per checkpoint file, recovery and both
+  * checksum sidecars intact, and the session's settings restored. */
+class StreamCheckpointSpec extends SparkTestBase {
+
+  private val ManagerKey = "spark.sql.streaming.checkpointFileManagerClass"
+
+  /** Three event slices staged as one parquet file each; returns the dir. */
+  private def stage(s: SparkSession, id: String): String = {
+    val ev = Tables.load(s, sfDir, "events")
+    StreamOps.stageBatches(s, id, (0 until 3).map(i => ev.filter(col("event_id") % 3 === i)))
+  }
+
+  private def source(s: SparkSession, dir: String): DataFrame =
+    s.readStream.schema(Tables.load(s, sfDir, "events").schema)
+      .option("maxFilesPerTrigger", "1").parquet(dir)
+
+  /** A stateful aggregation, re-emitted whole every micro-batch. */
+  private def counts(in: DataFrame): DataFrame =
+    in.groupBy(col("event_type"))
+      .agg(count(lit(1)).as("n"), sum(expr("CAST(FLOOR(value * 100.0) AS BIGINT)")).as("cents"))
+
+  private def sorted(df: DataFrame): Seq[String] = df.collect().map(_.toString).toSeq.sorted
+
+  /** Commands of every process the JVM started while `body` ran. */
+  private def forks[T](body: => T): (T, Seq[String]) = {
+    val rec = new Recording()
+    rec.enable("jdk.ProcessStart")
+    rec.start()
+    val out = try body finally rec.stop()
+    val f = Files.createTempFile("graft-forks", ".jfr")
+    try {
+      rec.dump(f)
+      val cmds = RecordingFile.readAllEvents(f).asScala.toSeq
+        .filter(_.getEventType.getName == "jdk.ProcessStart").map(_.getString("command"))
+      (out, cmds)
+    } finally { rec.close(); Files.deleteIfExists(f) }
+  }
+
+  private def runCounts(s: SparkSession, src: String, ckpt: String, name: String): DataFrame = {
+    StreamOps.withStreamingConf(s)(counts(source(s, src)).writeStream.format("memory")
+      .queryName(name).outputMode(OutputMode.Complete())
+      .option("checkpointLocation", ckpt).trigger(Trigger.AvailableNow()).start()
+      .awaitTermination())
+    s.table(name)
+  }
+
+  test("a 3-slice stateful runToMemory forks no readlink on its checkpoint dir") {
+    val s = spark.newSession()
+    val src = stage(s, "ckpt_spec_forks")
+    val (result, cmds) = forks(
+      sorted(StreamOps.runToMemory(s, counts(source(s, src)), OutputMode.Complete())))
+    assert(result == sorted(counts(Tables.load(s, sfDir, "events"))))
+    // runToMemory checkpoints under this JVM's own dir, and this run is the
+    // only streaming query of the recording
+    val ckpt = s"${StreamOps.scratchRoot}/ckpt/${ProcessHandle.current().pid()}/"
+    val mine = cmds.filter(_.contains(ckpt))
+    val readlinks = mine.filter(_.startsWith("readlink"))
+    assert(readlinks.size == 0, s"readlink forks, e.g. ${readlinks.take(2)}")
+    // the recording does see this run's forks: without libhadoop,
+    // RawLocalFileSystem.setPermission still runs chmod per checkpoint file
+    if (!org.apache.hadoop.util.NativeCodeLoader.isNativeCodeLoaded)
+      assert(mine.exists(_.startsWith("chmod")), s"no fork recorded for $ckpt")
+  }
+
+  test("a restart from a checkpoint written under the helper equals a one-shot run") {
+    val s = spark.newSession()
+    val full = stage(s, "ckpt_spec_restart")
+    val base = Paths.get(s"${StreamOps.scratchRoot}/ckpt_spec_restart")
+    StreamOps.wipeDir(base.toString)
+    val (src, ckpt) = (base.resolve("src"), base.resolve("ckpt").toString)
+    Files.createDirectories(src)
+    def add(i: Int): Unit = Files.copy(Paths.get(full, s"b$i.parquet"), src.resolve(s"b$i.parquet"),
+      StandardCopyOption.COPY_ATTRIBUTES)
+    try {
+      add(0); add(1)
+      val first = runCounts(s, src.toString, ckpt, "ckpt_spec_first")
+      assert(first.agg(sum(col("n"))).head().getLong(0) < Tables.load(s, sfDir, "events").count())
+      add(2)
+      val restarted = runCounts(s, src.toString, ckpt, "ckpt_spec_restarted")
+      val oneShot = StreamOps.runToMemory(s, counts(source(s, full)), OutputMode.Complete())
+      assert(sorted(restarted) == sorted(oneShot))
+
+      // both checksum sidecars of every state delta file are kept: Spark's
+      // checkpoint-file checksum (N.delta.crc) and Hadoop's (.N.delta.crc)
+      val part = Paths.get(ckpt, "state", "0", "0")
+      val files = Files.list(part)
+      val names = try files.iterator().asScala.map(_.getFileName.toString).toSet finally files.close()
+      val deltas = names.filter(_.matches("\\d+\\.delta"))
+      assert(deltas.size == 3, s"one delta per micro-batch, got ${names.toSeq.sorted}")
+      deltas.foreach { d =>
+        assert(names(s"$d.crc"), s"no Spark checksum for $d in ${names.toSeq.sorted}")
+        assert(names(s".$d.crc"), s"no Hadoop checksum for $d in ${names.toSeq.sorted}")
+      }
+    } finally StreamOps.wipeDir(base.toString)
+  }
+
+  test("the session's checkpoint manager and shuffle partitions are restored") {
+    val s = spark.newSession()
+    val src = stage(s, "ckpt_spec_conf")
+    s.conf.set("spark.sql.shuffle.partitions", "7")
+    assert(s.conf.getOption(ManagerKey).isEmpty)
+    StreamOps.runToMemory(s, counts(source(s, src)), OutputMode.Complete())
+    assert(s.conf.get("spark.sql.shuffle.partitions") == "7")
+    assert(s.conf.getOption(ManagerKey).isEmpty)
+
+    val own = "org.apache.spark.sql.execution.streaming.checkpointing.FileContextBasedCheckpointFileManager"
+    s.conf.set(ManagerKey, own)
+    val seen = intercept[IllegalStateException](StreamOps.withStreamingConf(s) {
+      throw new IllegalStateException(s.conf.get(ManagerKey) + " " + s.conf.get("spark.sql.shuffle.partitions"))
+    }).getMessage
+    assert(seen.endsWith("FileSystemBasedCheckpointFileManager " + sys.props.getOrElse("graft.stream.parts", "4")))
+    assert(s.conf.get(ManagerKey) == own)
+    assert(s.conf.get("spark.sql.shuffle.partitions") == "7")
+  }
+}

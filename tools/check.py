@@ -173,7 +173,13 @@ def compare_tol(name, spark_df, oracle_df, approx, rtol=1e-6):
 
 
 def _load_spark(outdir, name, tag=""):
-    """Concat the per-query parquet parts; None (reported) when absent."""
+    """Concat the per-query parquet parts; None (reported) when absent or
+    when Verify left its `_FAILED` marker (the query threw this run)."""
+    marker = os.path.join(outdir, name, "_FAILED")
+    if os.path.isfile(marker):
+        err = open(marker).read().strip().splitlines()
+        print(f"FAIL {name}: failed in Verify: {err[0] if err else '?'}{tag}")
+        return None
     files = glob.glob(os.path.join(outdir, name, "*.parquet"))
     if not files:
         print(f"FAIL {name}: no spark output{tag}")
