@@ -3,6 +3,7 @@ package graft.coverage
 import graft.{Q, Tables}
 import graft.sources.CdcFormats
 import graft.streaming.{StreamJoin, StreamOps}
+import graft.streaming.StreamOps.san
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
@@ -19,8 +20,6 @@ import org.apache.spark.sql.types.{LongType, StructType}
   * hash-compared against a DuckDB UNION ALL replaying the same op
   * mapping — a full wire-format round-trip with an independent oracle. */
 object CdcQueries {
-
-  private def san(dir: String) = dir.replaceAll("[^A-Za-z0-9]", "_")
 
   private val orderPayload = new StructType()
     .add("o_orderkey", LongType).add("o_custkey", LongType).add("cents", LongType)
@@ -146,8 +145,7 @@ object CdcQueries {
           .select(lit(0).as("side"), dbz("d", pay, nullPay).as("json"))
         .unionByName(ords.filter(m === 2).select(lit(0).as("side"),
           dbz("u", pay, struct(col("key"), (col("id") + 10000000L).as("id"))).as("json")))
-      val srcDir = StreamOps.stageBatches(s, s"cdc_join_${san(dir)}", Seq(b1, b2))
-      val stream = s.readStream.schema(b1.schema).option("maxFilesPerTrigger", "1").parquet(srcDir)
+      val stream = StreamOps.replay(s, "cdc_join", dir, Seq(b1, b2))
       val parsed = CdcFormats.debezium(stream, "json", joinPayload)
         .select(col("key"), col("side"),
           when(col("row_kind").isin("+I", "+U"), "+I").otherwise("-D").as("kind"),

@@ -14,8 +14,6 @@ import org.apache.spark.sql.streaming.OutputMode
   * (SURVEY §2.5/§2.7/§2.9/§2.11/§2.13, §1.2 type lattice). */
 object Extra2Queries {
 
-  private def ev(s: SparkSession, dir: String) = Tables.load(s, dir, "events")
-
   /** Streaming over-aggregate (running sum/count per key by event time) —
     * ref RowTimeRowsUnboundedPrecedingFunction (§2.7 streaming over); see
     * [[StreamOps.runningAggPerUser]]. */

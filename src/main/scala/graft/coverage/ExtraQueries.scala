@@ -14,8 +14,6 @@ import org.apache.spark.sql.streaming.OutputMode
   * algorithms. */
 object ExtraQueries {
 
-  private def ev(s: SparkSession, dir: String) = Tables.load(s, dir, "events")
-
   /** Lookup join: stream enriched against a static (per-batch re-readable)
     * dim table — ref LookupJoinRunner.java:34 + the proc-time temporal join
     * (SURVEY §2.4 maps both to Spark's stream-static join). The dim side is

@@ -4,6 +4,7 @@ import graft.{Q, Queries, Tables}
 import graft.Queries._
 import graft.datastream.DataStreamEnv
 import graft.streaming.{ChangelogAgg, StreamOps}
+import graft.streaming.StreamOps.san
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
@@ -12,8 +13,6 @@ import org.apache.spark.sql.streaming.OutputMode
   * scalar-function batch and the typed DataStream facade (SURVEY.md §1.1
   * RowKind, §2.1 sources/sinks/formats, §2.11, §1.1 DataStream). */
 object MiscQueries {
-
-  private def san(dir: String) = dir.replaceAll("[^A-Za-z0-9]", "_")
 
   /** Changelog (+I/-U/+U) count aggregation over a 2-micro-batch stream —
     * ref RowKind.java:25 + GroupAggFunction.java:43 via
@@ -24,11 +23,9 @@ object MiscQueries {
   val qChangelogAgg: Q = Q(
     run = (s, dir) => {
       val ev = Tables.load(s, dir, "events").select(col("event_id"), col("event_type"))
-      val srcDir = StreamOps.stageBatches(s, s"changelog_${san(dir)}", Seq(
+      val stream = StreamOps.replay(s, "changelog", dir, Seq(
         ev.filter(col("event_id") % 2 === 0),
         ev.filter(col("event_id") % 2 === 1)))
-      val stream = s.readStream.schema(ev.schema).option("maxFilesPerTrigger", "1")
-        .parquet(srcDir)
       StreamOps.runToMemory(s, ChangelogAgg.countChangelog(s, stream, "event_type"), OutputMode.Update())
         .orderBy(col("key"), col("row_kind"))
     },

@@ -18,7 +18,6 @@ import org.apache.spark.sql.functions._
   */
 object Pipeline3Queries {
 
-  private def docs(s: SparkSession, dir: String) = Tables.load(s, dir, "documents")
   private def emb(s: SparkSession, dir: String) = Tables.load(s, dir, "embeddings")
 
   /** Near-dup cluster canonicalization — the step AFTER pair generation in

@@ -16,8 +16,6 @@ import org.apache.spark.sql.functions._
   */
 object Pipeline4Queries {
 
-  private def docs(s: SparkSession, dir: String) = Tables.load(s, dir, "documents")
-
   /** Text normalization — the first pass of every web-scraped corpus:
     * collapse whitespace runs, trim, audit how much was cleaned. Map-side
     * only (no shuffle at any scale). The dirty input is synthesized

@@ -13,8 +13,6 @@ import org.apache.spark.sql.functions._
   * same split on 1 or 1000 executors). */
 object Pipeline5Queries {
 
-  private def docs(s: SparkSession, dir: String): DataFrame = Tables.load(s, dir, "documents")
-
   /** Deterministic stratified train/val/test split — 90/5/5 by document
     * hash, audited per (source, split): counts and char volume. The audit
     * row set is what a data-engineering review signs off on before a

@@ -24,14 +24,12 @@ import org.apache.spark.sql.expressions.Window
   * `ntile(k) OVER (ORDER BY …)` on per-document rows plans a
   * single-partition WindowExec — one task sorts the whole corpus at
   * 100 TB). [[graft.operators.RankSplit]] computes the ntile bucket
-  * boundaries as value-at-rank points via a binned two-pass lookup
-  * (bounded driver state, per-bin sorts only) and the bucket tag becomes a
+  * boundaries as value-at-rank points via a binned histogram lookup
+  * (in-plan, per-bin sorts only) and the bucket tag becomes a
   * map-side comparison — bit-identical to the ntile, zero unpartitioned
   * windows. The oracles keep the ntile spelling: DuckDB's single node IS
   * the scale this corpus fits on. */
 object Pipeline6Queries {
-
-  private def docs(s: SparkSession, dir: String): DataFrame = Tables.load(s, dir, "documents")
 
   /** DSIR importance weights over hashed bigram features: target = the
     * English subset (the quality proxy), raw = the whole corpus. Each

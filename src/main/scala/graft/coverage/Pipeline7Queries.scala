@@ -29,10 +29,6 @@ import org.apache.spark.sql.expressions.Window
   */
 object Pipeline7Queries {
 
-  private def docs(s: SparkSession, dir: String): DataFrame = Tables.load(s, dir, "documents")
-
-  private def san(dir: String) = dir.replaceAll("[^A-Za-z0-9]", "_")
-
   /** Exact repeated-substring spans: every word 8-gram that occurs in ≥2
     * documents marks its [pos, pos+8) span; overlapping/adjacent spans merge
     * per document (the lag-free island trick: a span opens an island iff its
@@ -364,10 +360,8 @@ object Pipeline7Queries {
       // arrival-order contract that makes keep-first == smallest-id)
       val thr = bands.agg(max(col("doc_id"))).collect()(0).get(0)
         .asInstanceOf[Number].longValue / 2
-      val srcDir = StreamOps.stageBatches(s, s"mhdedup_${san(dir)}", Seq(
+      val stream = StreamOps.replay(s, "mhdedup", dir, Seq(
         bands.filter(col("doc_id") <= thr), bands.filter(col("doc_id") > thr)))
-      val stream = s.readStream.schema(bands.schema)
-        .option("maxFilesPerTrigger", "1").parquet(srcDir)
       val claims = StreamOps.runToMemory(
         s, StreamOps.streamingLshDedup(s, stream), OutputMode.Append())
       claims.groupBy(col("doc_id")).agg(max(col("dup_band")).as("is_dup"))
@@ -425,10 +419,8 @@ object Pipeline7Queries {
         .select(col("doc_id"), col("br.band").as("band"), col("br.bkey").as("bkey"))
       val thr = prepped.agg(max(col("doc_id"))).collect()(0).get(0)
         .asInstanceOf[Number].longValue / 2
-      val srcDir = StreamOps.stageBatches(s, s"e2ecorpus_${san(dir)}", Seq(
+      val stream = StreamOps.replay(s, "e2ecorpus", dir, Seq(
         prepped.filter(col("doc_id") <= thr), prepped.filter(col("doc_id") > thr)))
-      val stream = s.readStream.schema(prepped.schema)
-        .option("maxFilesPerTrigger", "1").parquet(srcDir)
       val claims = StreamOps.runToMemory(
         s, StreamOps.streamingLshDedup(s, stream), OutputMode.Append())
       claims.groupBy(col("doc_id")).agg(

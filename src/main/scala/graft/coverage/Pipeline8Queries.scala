@@ -26,8 +26,6 @@ import org.apache.spark.sql.expressions.Window
   */
 object Pipeline8Queries {
 
-  private def docs(s: SparkSession, dir: String): DataFrame = Tables.load(s, dir, "documents")
-
   /** BM25 top-10 per query (k1=1.2, b=0.75, Lucene-style idf
     * ln((N-df+0.5)/(df+0.5)+1) ≥ 0). Per-term scores are quantized to
     * integer micro-units *before* the per-(query,doc) sum (the corpus-wide

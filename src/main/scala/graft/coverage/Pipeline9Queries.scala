@@ -30,8 +30,6 @@ import org.apache.spark.sql.expressions.Window
   */
 object Pipeline9Queries {
 
-  private def docs(s: SparkSession, dir: String): DataFrame = Tables.load(s, dir, "documents")
-
   /** Training-sequence budget (tokens per packed sequence). */
   private val SeqLen = 256L
 

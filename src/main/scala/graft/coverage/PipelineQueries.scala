@@ -24,7 +24,6 @@ import org.apache.spark.sql.functions._
   */
 object PipelineQueries {
 
-  private def docs(s: SparkSession, dir: String) = Tables.load(s, dir, "documents")
   private def emb(s: SparkSession, dir: String) = Tables.load(s, dir, "embeddings")
 
   private val words: Column = split(col("text"), " ")

@@ -28,8 +28,6 @@ object RelationalQueries {
   private def part(s: SparkSession, dir: String) = Tables.load(s, dir, "part")
   private def nat(s: SparkSession, dir: String) = Tables.load(s, dir, "nation")
   private def reg(s: SparkSession, dir: String) = Tables.load(s, dir, "region")
-  private def ev(s: SparkSession, dir: String) = Tables.load(s, dir, "events")
-  private def docs(s: SparkSession, dir: String) = Tables.load(s, dir, "documents")
 
   // ------------------------------------------------------------ §2.2 Calc
 

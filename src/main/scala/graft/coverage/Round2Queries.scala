@@ -4,6 +4,7 @@ import graft.{Q, Queries, Tables}
 import graft.Queries._
 import graft.operators.GraphOps
 import graft.streaming.StreamOps
+import graft.streaming.StreamOps.san
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
@@ -12,9 +13,6 @@ import org.apache.spark.sql.streaming.OutputMode
   * linkanalysis parity), the BroadcastProcessFunction rule-stream pattern,
   * and the ORC format roundtrip. */
 object Round2Queries {
-
-  private def san(dir: String) = dir.replaceAll("[^A-Za-z0-9]", "_")
-  private def ev(s: SparkSession, dir: String) = Tables.load(s, dir, "events")
 
   /** Co-purchase graph (same edge build as q_graph_components). */
   private[coverage] def coEdges(s: SparkSession, dir: String): DataFrame = {
@@ -71,8 +69,7 @@ object Round2Queries {
         .unionByName(data.filter(col("id") % 2 === 0))
       val b2 = rules(Seq(("click", 9000L), ("error", 1000L)))
         .unionByName(data.filter(col("id") % 2 === 1))
-      val srcDir = StreamOps.stageBatches(s, s"bcast_rules_${san(dir)}", Seq(b1, b2))
-      val stream = s.readStream.schema(b1.schema).option("maxFilesPerTrigger", "1").parquet(srcDir)
+      val stream = StreamOps.replay(s, "bcast_rules", dir, Seq(b1, b2))
       StreamOps.runToMemory(s, StreamOps.broadcastRuleFilter(s, stream), OutputMode.Update())
         .orderBy(col("event_type"), col("event_id"))
     },

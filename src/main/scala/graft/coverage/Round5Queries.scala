@@ -1,6 +1,7 @@
 package graft.coverage
 
 import graft.{Q, Tables}
+import graft.streaming.StreamOps.san
 import org.apache.spark.sql.functions._
 
 /** Round-5 surface completions:
@@ -304,7 +305,7 @@ object Round5Queries {
     * column's partial coverage survive the merge. */
   val qSinkSchemaEvolution: Q = Q(
     run = (s, dir) => {
-      val scratch = graft.streaming.StreamOps.scratchRoot + s"/schevo_${dir.replaceAll("[^A-Za-z0-9]", "_")}"
+      val scratch = graft.streaming.StreamOps.scratchRoot + s"/schevo_${san(dir)}"
       val li = Tables.load(s, dir, "lineitem")
         .select(col("l_orderkey"), col("l_linenumber"), col("l_returnflag"),
                 expr("CAST(FLOOR(l_extendedprice * 100.0) AS BIGINT)").as("price_c"),
@@ -387,7 +388,7 @@ object Round5Queries {
     * oracle. */
   val qPipeCompact: Q = Q(
     run = (s, dir) => {
-      val scratch = graft.streaming.StreamOps.scratchRoot + s"/compact_${dir.replaceAll("[^A-Za-z0-9]", "_")}"
+      val scratch = graft.streaming.StreamOps.scratchRoot + s"/compact_${san(dir)}"
       val li = Tables.load(s, dir, "lineitem")
         .select(col("l_orderkey"), col("l_returnflag"),
                 expr("CAST(FLOOR(l_extendedprice * 100.0) AS BIGINT)").as("price_c"))

@@ -2,6 +2,7 @@ package graft.coverage
 
 import graft.{Q, Tables}
 import graft.sql.EngineEnv
+import graft.streaming.StreamOps.san
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -16,8 +17,6 @@ import org.apache.spark.sql.functions._
   * mutations actually took effect on read-back.
   */
 object Round6Queries {
-
-  private def san(dir: String) = dir.replaceAll("[^A-Za-z0-9]", "_")
 
   /** ALTER TABLE SET switches BOTH path and format (parquet dir A → orc
     * dir B) and the very next read must see B's rows through the orc

@@ -3,6 +3,7 @@ package graft.coverage
 import graft.{Q, Tables}
 import graft.sql.EngineEnv
 import graft.streaming.StreamOps
+import graft.streaming.StreamOps.san
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
 import org.apache.spark.sql.types.{LongType, StructType}
@@ -13,7 +14,6 @@ import org.apache.spark.sql.types.{LongType, StructType}
   */
 object Round7Queries {
 
-  private def san(dir: String) = dir.replaceAll("[^A-Za-z0-9]", "_")
   private val obsSeq = new java.util.concurrent.atomic.AtomicLong(0)
 
   /** Metric groups, oracle-gated — ref AbstractMetricGroup / the operator
@@ -84,10 +84,8 @@ object Round7Queries {
     run = (s, dir) => {
       val e = Tables.load(s, dir, "events")
         .select(col("user_id"), col("event_id"), col("ts"), col("value"))
-      val srcDir = StreamOps.stageBatches(s, s"tsort_${san(dir)}",
+      val stream = StreamOps.replay(s, "tsort", dir,
         (0 until 3).map(b => e.filter(pmod(col("event_id"), lit(3)) === b)))
-      val stream = s.readStream.schema(e.schema)
-        .option("maxFilesPerTrigger", "1").parquet(srcDir)
       StreamOps.runToMemory(s, StreamOps.temporalSort(s, stream), OutputMode.Update())
         .orderBy(col("user_id"), col("seq"))
     },
@@ -133,10 +131,7 @@ object Round7Queries {
         .select(col("user_id"), lit(b.toLong).as("pt"), lit(0L).as("is_tick"))
       val tick = base.select(col("user_id")).distinct()
         .select(col("user_id"), lit(100L).as("pt"), lit(1L).as("is_tick"))
-      val srcDir = StreamOps.stageBatches(s, s"debounce_${san(dir)}",
-        (0 until 6).map(batch) :+ tick)
-      val stream = s.readStream.schema(tick.schema)
-        .option("maxFilesPerTrigger", "1").parquet(srcDir)
+      val stream = StreamOps.replay(s, "debounce", dir, (0 until 6).map(batch) :+ tick)
       StreamOps.runToMemory(s,
           StreamOps.procTimeDebounceInjected(s, stream, duration = 2L), OutputMode.Update())
         .orderBy(col("user_id"), col("fired_at"))
@@ -1008,10 +1003,10 @@ object Round7Queries {
   val qStreamRateSource: Q = Q(
     run = (s, _) => {
       val name = s"graft_rate_${obsSeq.incrementAndGet()}"
-      StreamOps.withStreamingConf(s) {
-        val q = s.readStream.format("rate")
-          .option("rowsPerSecond", "5000").option("numPartitions", "2").load()
-          .writeStream.format("memory").queryName(name)
+      val rate = s.readStream.format("rate")
+        .option("rowsPerSecond", "5000").option("numPartitions", "2").load()
+      StreamOps.withStreamingConf(rate) {
+        val q = rate.writeStream.format("memory").queryName(name)
           .outputMode(OutputMode.Append()).start()
         try {
           val deadline = System.currentTimeMillis() + 30000
@@ -1074,7 +1069,7 @@ object Round7Queries {
       val counts = env.socketTextStream("localhost", server.getLocalPort)
         .flatMap(_.split(" ").toSeq).ds
         .groupBy(col("value").as("word")).agg(count(lit(1)).as("cnt"))
-      StreamOps.withStreamingConf(s) {
+      StreamOps.withStreamingConf(counts) {
         val q = counts.writeStream.format("memory").queryName(name)
           .outputMode(OutputMode.Complete()).start()
         try {

@@ -2,6 +2,7 @@ package graft.coverage
 
 import graft.{Q, Tables}
 import graft.streaming.StreamOps
+import graft.streaming.StreamOps.san
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
@@ -13,7 +14,6 @@ import org.apache.spark.sql.streaming.Trigger
   */
 object Round8Queries {
 
-  private def san(dir: String) = dir.replaceAll("[^A-Za-z0-9]", "_")
   private val seq = new java.util.concurrent.atomic.AtomicLong(0)
 
   /** Write `df` as one parquet file named `name` inside `srcDir` (the
@@ -55,17 +55,19 @@ object Round8Queries {
       addBatch(base, src, "b0", orders.filter(col("k") % 3 === 0))
       addBatch(base, src, "b1", orders.filter(col("k") % 3 === 1))
       val schema = orders.schema
-      def runOnce(tbl: String): (DataFrame, Long) = StreamOps.withStreamingConf(s) {
-        val q = s.readStream.schema(schema)
+      def runOnce(tbl: String): (DataFrame, Long) = {
+        val agg = s.readStream.schema(schema)
           .option("maxFilesPerTrigger", "1").parquet(src)
           .groupBy(col("pri"))
           .agg(count(lit(1)).as("n"), expr("CAST(SUM(cents) AS BIGINT)").as("sum_cents"))
-          .writeStream.format("memory").queryName(tbl)
-          .outputMode(org.apache.spark.sql.streaming.OutputMode.Complete())
-          .option("checkpointLocation", ckpt)
-          .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-        (s.table(tbl), q.recentProgress.map(_.numInputRows).sum)
+        StreamOps.withStreamingConf(agg) {
+          val q = agg.writeStream.format("memory").queryName(tbl)
+            .outputMode(org.apache.spark.sql.streaming.OutputMode.Complete())
+            .option("checkpointLocation", ckpt)
+            .trigger(Trigger.AvailableNow()).start()
+          q.awaitTermination()
+          (s.table(tbl), q.recentProgress.map(_.numInputRows).sum)
+        }
       }
       val n = seq.incrementAndGet()
       val total = orders.count()
@@ -128,7 +130,7 @@ object Round8Queries {
       def fire(): DataFrame = {
         def src(p: String) = s.readStream.schema(schema)
           .option("maxFilesPerTrigger", "1").parquet(p)
-        StreamOps.withStreamingConf(s)(src(srcA).unionByName(src(srcB))
+        val wins = src(srcA).unionByName(src(srcB))
           .withWatermark("ts", "10 minutes")
           .groupBy(col("src"), window(col("ts"), "15 minutes"))
           .agg(count(lit(1)).as("n"), expr("CAST(SUM(k) AS BIGINT)").as("sum_k"))
@@ -136,6 +138,7 @@ object Round8Queries {
             expr(s"CAST((unix_timestamp(window.start) - unix_timestamp($t0)) / 60 AS BIGINT)")
               .as("win_start_min"),
             col("n"), col("sum_k"))
+        StreamOps.withStreamingConf(wins)(wins
           .writeStream.format("parquet").option("path", out)
           .outputMode(org.apache.spark.sql.streaming.OutputMode.Append())
           .option("checkpointLocation", ckpt)
@@ -317,17 +320,19 @@ object Round8Queries {
       addBatch(base, src, "b0", orders.filter(col("k") % 4 === 0))
       addBatch(base, src, "b1", orders.filter(col("k") % 4 === 1))
       val schema = orders.schema
-      def runOnce(ckpt: String, tbl: String): (DataFrame, Long) = StreamOps.withStreamingConf(s) {
-        val q = s.readStream.schema(schema)
+      def runOnce(ckpt: String, tbl: String): (DataFrame, Long) = {
+        val agg = s.readStream.schema(schema)
           .option("maxFilesPerTrigger", "1").parquet(src)
           .groupBy(col("pri"))
           .agg(count(lit(1)).as("n"), expr("CAST(SUM(cents) AS BIGINT)").as("sum_cents"))
-          .writeStream.format("memory").queryName(tbl)
-          .outputMode(org.apache.spark.sql.streaming.OutputMode.Complete())
-          .option("checkpointLocation", ckpt)
-          .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-        (s.table(tbl), q.recentProgress.map(_.numInputRows).sum)
+        StreamOps.withStreamingConf(agg) {
+          val q = agg.writeStream.format("memory").queryName(tbl)
+            .outputMode(org.apache.spark.sql.streaming.OutputMode.Complete())
+            .option("checkpointLocation", ckpt)
+            .trigger(Trigger.AvailableNow()).start()
+          q.awaitTermination()
+          (s.table(tbl), q.recentProgress.map(_.numInputRows).sum)
+        }
       }
       def copyDir(from: String, to: String): Unit = {
         val f = java.nio.file.Paths.get(from)

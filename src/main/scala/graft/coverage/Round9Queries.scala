@@ -22,16 +22,8 @@ object Round9Queries {
   /** Run `body` with the loop broadcast threshold forced to zero. The
     * loops construct eagerly (every round localCheckpoints), so restoring
     * the conf afterwards cannot leak back into the returned plan. */
-  private def partitioned[T](s: SparkSession)(body: => T): T = {
-    val key = "graft.graph.broadcastMaxRows"
-    val prev = s.conf.getOption(key)
-    s.conf.set(key, "0")
-    try body
-    finally prev match {
-      case Some(v) => s.conf.set(key, v)
-      case None    => s.conf.unset(key)
-    }
-  }
+  private def partitioned[T](s: SparkSession)(body: => T): T =
+    StreamOps.withConf(s, "graft.graph.broadcastMaxRows" -> "0")(body)
 
   val qGraphPagerankPart: Q = Q(
     run = (s, dir) => partitioned(s) {
@@ -70,11 +62,9 @@ object Round9Queries {
   val qStreamPrintSink: Q = Q(
     run = (s, dir) => {
       val ev = Tables.load(s, dir, "events").select(col("event_id"), col("event_type"))
-      val srcDir = StreamOps.stageBatches(s, s"print_sink_${dir.replaceAll("[^A-Za-z0-9]", "_")}", Seq(
+      val stream = StreamOps.replay(s, "print_sink", dir, Seq(
         ev.filter(col("event_id") % 2 === 0),
         ev.filter(col("event_id") % 2 === 1)))
-      val stream = s.readStream.schema(ev.schema).option("maxFilesPerTrigger", "1")
-        .parquet(srcDir)
       val rendered = PrintSink.render(
         ChangelogAgg.countChangelog(s, stream, "event_type"), "print_sink")
       StreamOps.runToMemory(s, rendered, OutputMode.Update()).orderBy(col("line"))

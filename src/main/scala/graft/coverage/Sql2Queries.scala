@@ -2,6 +2,7 @@ package graft.coverage
 
 import graft.{Q, Tables}
 import graft.sql.EngineEnv
+import graft.streaming.StreamOps.san
 import org.apache.spark.sql.functions._
 
 /** Round-5 batch 2: the Table-API / SQL surfaces a Flink-1.12 program
@@ -11,8 +12,6 @@ import org.apache.spark.sql.functions._
   * function admin statements (SHOW VIEWS, DESCRIBE DATABASE, ALTER
   * FUNCTION). */
 object Sql2Queries {
-
-  private def san(dir: String) = dir.replaceAll("[^A-Za-z0-9]", "_")
 
   /** FLIP-113 dynamic table options — ref planner/hint/FlinkHints.java:32
     * (HINT_NAME_OPTIONS): `SELECT ... FROM t [+OPTIONS hint]` merges
@@ -360,7 +359,7 @@ object Sql2Queries {
         Tables.load(s, dir, "events").count() / 3)
       val src = graft.streaming.StreamOps.readTable(s, dir, "events")
         .select(col("event_id"), col("user_id"), col("event_type"), col("value"))
-      graft.streaming.StreamOps.withStreamingConf(s)(src.writeStream.format("parquet")
+      graft.streaming.StreamOps.withStreamingConf(src)(src.writeStream.format("parquet")
         .option("path", s"$scratch/out")
         .option("checkpointLocation", s"$scratch/ckpt")
         .option("maxRecordsPerFile", rollAt.toString)
@@ -395,7 +394,7 @@ object Sql2Queries {
       graft.streaming.StreamOps.wipeDir(scratch)
       val src = graft.streaming.StreamOps.readTable(s, dir, "events")
       val agg = src.groupBy(col("event_type")).count()
-      graft.streaming.StreamOps.withStreamingConf(s)(agg.writeStream.format("memory")
+      graft.streaming.StreamOps.withStreamingConf(agg)(agg.writeStream.format("memory")
         .queryName(s"qstate_sink_${san(dir)}")
         .outputMode("complete")
         .option("checkpointLocation", s"$scratch/ckpt")
@@ -430,10 +429,8 @@ object Sql2Queries {
         .select(col("event_id"), col("event_type"), col("user_id"))
       val mid = ev.agg(max(col("event_id"))).collect()(0).get(0)
         .asInstanceOf[Number].longValue / 2
-      val srcDir = StreamOps.stageBatches(s, s"earlyfire_${san(dir)}", Seq(
+      val stream = StreamOps.replay(s, "earlyfire", dir, Seq(
         ev.filter(col("event_id") <= mid), ev.filter(col("event_id") > mid)))
-      val stream = s.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1").parquet(srcDir)
       val partials = StreamOps.runToMemory(s,
         stream.groupBy(col("event_type"))
           .agg(count(lit(1)).as("n"), sum(col("user_id")).as("u")),

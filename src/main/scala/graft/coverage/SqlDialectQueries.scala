@@ -2,6 +2,7 @@ package graft.coverage
 
 import graft.{Q, Queries}
 import graft.sql.EngineEnv
+import graft.streaming.StreamOps.san
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
@@ -570,7 +571,7 @@ object SqlDialectQueries {
       import org.apache.spark.sql.functions._
       val ev = graft.Tables.load(s, dir, "events")
       val scratch = graft.streaming.StreamOps.scratchRoot +
-        s"/tjoin_${dir.replaceAll("[^A-Za-z0-9]", "_")}"
+        s"/tjoin_${san(dir)}"
       ev.filter(col("event_type") === "purchase")
         .groupBy(col("user_id"), col("ts")).agg(max(col("event_id")).as("version_id"))
         .write.mode("overwrite").parquet(s"$scratch/rates")

@@ -2,6 +2,7 @@ package graft.coverage
 
 import graft.{Q, Tables}
 import graft.streaming.{RetractableTopN, StreamJoin, StreamOps}
+import graft.streaming.StreamOps.san
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
@@ -11,7 +12,7 @@ import org.apache.spark.sql.streaming.OutputMode
   * round-1 verdict's #1 and #2 gaps).
   *
   * Gating pattern (the q_changelog_agg layout): both sides staged as two
-  * replayed micro-batches via [[StreamOps.stageBatches]], the operator's
+  * replayed micro-batches via [[StreamOps.replay]], the operator's
   * full +I/-D changelog collected from an Update-mode memory sink, then
   * MATERIALIZED (net-positive rows) and hash-compared against the
   * equivalent DuckDB batch join — retraction correctness is exactly what
@@ -20,32 +21,22 @@ import org.apache.spark.sql.streaming.OutputMode
   * are pinned per-batch in StreamingSpec. */
 object Streaming2Queries {
 
-  private def san(dir: String) = dir.replaceAll("[^A-Za-z0-9]", "_")
-
   /** Tagged changelog-join input: left = pricey purchases, right = severe
     * errors (a right-sparse selection so some keys stay null-padded),
     * replayed as two batches split by event-id parity. The three join
-    * queries (left_outer/semi/anti) consume IDENTICAL input, so the staged
-    * dir is written once per (JVM, fixture dir) and shared — each query
-    * still runs its own streaming query/checkpoint over it. */
-  private val stagedDirs = scala.collection.concurrent.TrieMap[String, (String, org.apache.spark.sql.types.StructType)]()
+    * queries (left_outer/semi/anti) consume identical input, each staged
+    * under its own `tag`. */
   private def stagedJoinStream(s: SparkSession, dir: String, tag: String): DataFrame = {
-    // getOrElseUpdate on TrieMap is not atomic — serialize staging so two
-    // concurrent first uses cannot both write the shared dir
-    val (srcDir, schema) = stagedDirs.synchronized { stagedDirs.getOrElseUpdate(dir, {
-      val ev = Tables.load(s, dir, "events")
-      val left = ev.filter(col("event_type") === "purchase" && col("value") > 9.0)
-        .select(col("user_id").as("key"), lit(0).as("side"), lit("+I").as("kind"),
-                col("event_id").as("id"), col("event_id").as("seq"))
-      val right = ev.filter(col("event_type") === "error" && col("value") > 90.0)
-        .select(col("user_id").as("key"), lit(1).as("side"), lit("+I").as("kind"),
-                col("event_id").as("id"), col("event_id").as("seq"))
-      val tagged = left.unionByName(right)
-      (StreamOps.stageBatches(s, s"chjoin_shared_${san(dir)}", Seq(
-        tagged.filter(col("id") % 2 === 0), tagged.filter(col("id") % 2 === 1))),
-       tagged.schema)
-    }) }
-    s.readStream.schema(schema).option("maxFilesPerTrigger", "1").parquet(srcDir)
+    val ev = Tables.load(s, dir, "events")
+    val left = ev.filter(col("event_type") === "purchase" && col("value") > 9.0)
+      .select(col("user_id").as("key"), lit(0).as("side"), lit("+I").as("kind"),
+              col("event_id").as("id"), col("event_id").as("seq"))
+    val right = ev.filter(col("event_type") === "error" && col("value") > 90.0)
+      .select(col("user_id").as("key"), lit(1).as("side"), lit("+I").as("kind"),
+              col("event_id").as("id"), col("event_id").as("seq"))
+    val tagged = left.unionByName(right)
+    StreamOps.replay(s, s"chjoin_$tag", dir, Seq(
+      tagged.filter(col("id") % 2 === 0), tagged.filter(col("id") % 2 === 1)))
   }
 
   private val oSides = """
@@ -133,8 +124,7 @@ object Streaming2Queries {
         .unionByName(j.select(
           when(col("c1").isNotNull, "+U").otherwise("+I").as("kind"), lit("all").as("pkey"),
           col("event_type").as("id"), col("ct").as("value"), lit(1L).as("seq")))
-      val srcDir = StreamOps.stageBatches(s, s"rtopn_${san(dir)}", Seq(b1, b2))
-      val stream = s.readStream.schema(b1.schema).option("maxFilesPerTrigger", "1").parquet(srcDir)
+      val stream = StreamOps.replay(s, "rtopn", dir, Seq(b1, b2))
       val acc = StreamOps.runToMemory(
         s, RetractableTopN.retractableTopN(s, stream, 3), OutputMode.Update())
       RetractableTopN.latestRanking(acc)
@@ -192,23 +182,17 @@ object Streaming2Queries {
     * (measured: filterWm(N) = max event time over batches ≤ N−2, minus
     * delay) — with b2 in between, b3's filter watermark is exactly
     * max(even ts) − 30 min, which the oracle can replay. */
-  /** The main and side lateness queries replay IDENTICAL batches (evens,
-    * fresh odds, expired odds) — staged once per (JVM, fixture dir) and
-    * shared, like [[stagedJoinStream]]. */
-  private val lateStagedDirs = scala.collection.concurrent.TrieMap[String, (String, org.apache.spark.sql.types.StructType)]()
+  /** The main and side lateness queries replay identical batches (evens,
+    * fresh odds, expired odds), each staged under its own `tag`. */
   private def lateStagedStream(s: SparkSession, dir: String, tag: String): DataFrame = {
-    val (srcDir, schema) = lateStagedDirs.synchronized { lateStagedDirs.getOrElseUpdate(dir, {
-      val ev = Tables.load(s, dir, "events").select(col("user_id"), col("event_id"), col("ts"))
-      val tmax = ev.agg(max(col("ts"))).collect()(0).getTimestamp(0) // staging-time scalar
-      val cut = new java.sql.Timestamp(tmax.getTime - 30L * 60 * 1000)
-      val odds = ev.filter(col("event_id") % 2 === 1)
-      (StreamOps.stageBatches(s, s"late_shared_${san(dir)}", Seq(
-        ev.filter(col("event_id") % 2 === 0),
-        odds.filter(col("ts") > lit(cut)),
-        odds.filter(col("ts") <= lit(cut)))),
-       ev.schema)
-    }) }
-    s.readStream.schema(schema).option("maxFilesPerTrigger", "1").parquet(srcDir)
+    val ev = Tables.load(s, dir, "events").select(col("user_id"), col("event_id"), col("ts"))
+    val tmax = ev.agg(max(col("ts"))).collect()(0).getTimestamp(0) // staging-time scalar
+    val cut = new java.sql.Timestamp(tmax.getTime - 30L * 60 * 1000)
+    val odds = ev.filter(col("event_id") % 2 === 1)
+    StreamOps.replay(s, s"late_$tag", dir, Seq(
+      ev.filter(col("event_id") % 2 === 0),
+      odds.filter(col("ts") > lit(cut)),
+      odds.filter(col("ts") <= lit(cut))))
   }
 
   /** allowedLateness MAIN branch — ref WindowedStream.java:108: tumbling
@@ -427,9 +411,8 @@ object Streaming2Queries {
         .select(col("user_id"), col("event_id"), col("value"),
           row_number().over(Window.partitionBy("user_id").orderBy(col("ts"), col("event_id")))
             .cast("long").as("seq"))
-      val srcDir = StreamOps.stageBatches(s, s"procrange_${san(dir)}", Seq(
+      val stream = StreamOps.replay(s, "procrange", dir, Seq(
         ev.filter(col("seq") <= 10), ev.filter(col("seq") > 10)))
-      val stream = s.readStream.schema(ev.schema).option("maxFilesPerTrigger", "1").parquet(srcDir)
       StreamOps.runToMemory(
           s, StreamOps.procTimeOverAgg(s, stream, "range", 3L), OutputMode.Update())
         .orderBy(col("user_id"), col("event_id"))
@@ -526,22 +509,13 @@ object Streaming2Queries {
   /** Flink keyed-state trio (ValueState/ListState/MapState) on Spark 4's
     * NATIVE transformWithState API ([[StreamOps.KeyedStateProcessor]]) —
     * running count, last-3 ring and per-type counts per user, one output
-    * row per event. RocksDB provider is required by TWS; restored after
-    * the run so the rest of the suite keeps the default store. */
+    * row per event. The run picks the RocksDB provider TWS requires for
+    * this query only (`StreamOps.withStreamingConf`). */
   val qStreamTwsProcess: Q = Q(
-    run = (s, dir) => {
-      val k = "spark.sql.streaming.stateStore.providerClass"
-      val prev = s.conf.getOption(k)
-      val out =
-        try StreamOps.runToMemory(s,
-          StreamOps.twsKeyedProcess(s, StreamOps.readTable(s, dir, "events")),
-          OutputMode.Append())
-        finally prev match {
-          case Some(v) => s.conf.set(k, v)
-          case None => s.conf.unset(k)
-        }
-      out.orderBy(col("user_id"), col("event_id"))
-    },
+    run = (s, dir) =>
+      StreamOps.runToMemory(s,
+        StreamOps.twsKeyedProcess(s, StreamOps.readTable(s, dir, "events")),
+        OutputMode.Append()).orderBy(col("user_id"), col("event_id")),
     oracle = Some("""
       SELECT user_id, event_id,
              row_number() OVER (PARTITION BY user_id ORDER BY ts, event_id) AS run_cnt,
@@ -559,19 +533,10 @@ object Streaming2Queries {
     * deadline. The global-max user (and any within 30 min of it) never
     * fires: their deadline stays above the final watermark. */
   val qStreamTwsTimer: Q = Q(
-    run = (s, dir) => {
-      val k = "spark.sql.streaming.stateStore.providerClass"
-      val prev = s.conf.getOption(k)
-      val out =
-        try StreamOps.runToMemory(s,
-          StreamOps.twsInactivityAlert(s, StreamOps.readTable(s, dir, "events"), 30 * 60 * 1000),
-          OutputMode.Append())
-        finally prev match {
-          case Some(v) => s.conf.set(k, v)
-          case None => s.conf.unset(k)
-        }
-      out.orderBy(col("user_id"))
-    },
+    run = (s, dir) =>
+      StreamOps.runToMemory(s,
+        StreamOps.twsInactivityAlert(s, StreamOps.readTable(s, dir, "events"), 30 * 60 * 1000),
+        OutputMode.Append()).orderBy(col("user_id")),
     oracle = Some("""
       WITH m AS (SELECT user_id, epoch_ms(MAX(ts)) AS mt FROM events GROUP BY user_id),
            w AS (SELECT epoch_ms(MAX(ts)) AS wm FROM events)
@@ -598,10 +563,8 @@ object Streaming2Queries {
         case r => Array(r.getTimestamp(0), r.getTimestamp(1))
       }
       val mid = new java.sql.Timestamp((lo.getTime + hi.getTime) / 2)
-      val srcDir = StreamOps.stageBatches(s, s"pcommit_${san(dir)}", Seq(
+      val stream = StreamOps.replay(s, "pcommit", dir, Seq(
         ev.filter(col("ts") <= lit(mid)), ev.filter(col("ts") > lit(mid))))
-      val stream = s.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1").parquet(srcDir)
       val out = graft.streaming.StreamOps.scratchRoot + s"/pcommit_out_${san(dir)}"
       StreamOps.partitionCommitRun(s, stream, out, bucketSec = 86400, delaySec = 1800)
         .groupBy(col("p_bucket"))
@@ -674,8 +637,7 @@ object Streaming2Queries {
         .select(col("key"), lit(1).as("side"), lit("+I").as("kind"),
                 col("key").as("id"), (col("key") * 4 + 3).as("seq"))
       val tagged = left.unionByName(right)
-      val srcDir = StreamOps.stageBatches(s, s"upsert_sql_join_${san(dir)}", Seq(tagged))
-      val stream = s.readStream.schema(tagged.schema).parquet(srcDir)
+      val stream = StreamOps.replay(s, "upsert_sql_join", dir, Seq(tagged))
       val joined = StreamOps.runToMemory(
         s, StreamJoin.changelogJoin(s, stream, "inner"), OutputMode.Update())
       StreamJoin.materialize(joined)
@@ -702,9 +664,8 @@ object Streaming2Queries {
                   .otherwise(col("event_id")).cast("long").as("value"),
                 col("event_id").cast("long").as("seq"))
       val mid = ev.agg(max(col("seq"))).collect()(0).getLong(0) / 2 // staging-time scalar
-      val srcDir = StreamOps.stageBatches(s, s"upsert_${san(dir)}", Seq(
+      val stream = StreamOps.replay(s, "upsert", dir, Seq(
         ev.filter(col("seq") <= mid), ev.filter(col("seq") > mid)))
-      val stream = s.readStream.schema(ev.schema).option("maxFilesPerTrigger", "1").parquet(srcDir)
       val changelog = StreamOps.runToMemory(
         s, StreamOps.upsertChangelog(s, stream), OutputMode.Update())
       val state = changelog.groupBy(col("key"), col("value"))

@@ -245,10 +245,7 @@ object StreamingQueries {
       def tagged(tpe: String, side: Int) = e.filter(col("event_type") === tpe)
         .select(col("user_id").cast("long").as("key"), lit(side).as("side"),
                 expr("unix_micros(ts)").as("tsMicros"), col("event_id").cast("long").as("id"), col("ts"))
-      val srcDir = StreamOps.stageBatches(s, s"asof_${dir.replaceAll("[^A-Za-z0-9]", "_")}", Seq(
-        tagged("click", 0), tagged("purchase", 1)))
-      val schema = tagged("click", 0).schema
-      val stream = s.readStream.schema(schema).option("maxFilesPerTrigger", "1").parquet(srcDir)
+      val stream = StreamOps.replay(s, "asof", dir, Seq(tagged("click", 0), tagged("purchase", 1)))
       StreamOps.runToMemory(s, StreamOps.streamingAsOf(s, stream), OutputMode.Update())
         .orderBy(col("key"), col("left_id"))
     },

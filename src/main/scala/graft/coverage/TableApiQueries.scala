@@ -12,8 +12,6 @@ import org.apache.spark.sql.functions._
   * surface drives identical Catalyst plans. */
 object TableApiQueries {
 
-  private def ev(s: SparkSession, dir: String) = Tables.load(s, dir, "events")
-
   /** `table.window(Tumble over 10.minutes on 'ts as 'w).groupBy('w,
     * 'event_type).select('w.start, ...)` — the Table-API group-window. */
   val qTableApiTumble: Q = Q(

@@ -2,6 +2,7 @@ package graft.coverage
 
 import graft.{Q, Tables}
 import graft.sql.EngineEnv
+import graft.streaming.StreamOps.san
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
@@ -14,8 +15,6 @@ object Tpcds4Queries {
   private def sql(text: String): Q =
     Q(run = (s: SparkSession, dir: String) => { Tables.registerAll(s, dir); s.sql(text) },
       oracle = Some(text))
-
-  private def san(dir: String) = dir.replaceAll("[^A-Za-z0-9]", "_")
 
   /** TPC-DS q88 shape — eight independent single-row aggregates
     * cross-joined into one wide row. Each COUNT scans with its own

@@ -498,7 +498,7 @@ object TpcdsShapeQueries {
   /** Customer-spend decile analysis (the "segment the customer base"
     * shape). Unique tiebreak keeps bucket assignment deterministic. The
     * input is one row per CUSTOMER — sf-scaled — so the decile split is
-    * the exact two-pass [[graft.operators.RankSplit]] (bit-identical to
+    * the exact [[graft.operators.RankSplit]] (bit-identical to
     * `NTILE(10) OVER (ORDER BY tot DESC, c_custkey)`, which the oracle
     * keeps), never a single-partition global-sort window (r15 window
     * lint). */

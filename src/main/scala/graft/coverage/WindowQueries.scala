@@ -14,8 +14,6 @@ import org.apache.spark.sql.functions._
   */
 object WindowQueries {
 
-  private def ev(s: SparkSession, dir: String) = Tables.load(s, dir, "events")
-
   /** TUMBLE — ref assigners/TumblingWindowAssigner.java + WindowOperator
     * .java:93; Spark `window()` is epoch-aligned exactly like the
     * reference's assigner. Group-by is (window, type): partial aggregation

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.streaming.StreamOps
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -65,9 +66,7 @@ object GraphOps {
     spark.conf.getOption("graft.graph.loopShufflePartitions") match {
       case None => body
       case Some(n) => confLock.synchronized {
-        val prev = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", n)
-        try body finally spark.conf.set("spark.sql.shuffle.partitions", prev)
+        StreamOps.withConf(spark, "spark.sql.shuffle.partitions" -> n)(body)
       }
     }
 

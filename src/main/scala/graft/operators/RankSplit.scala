@@ -1,84 +1,26 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** EXACT global-rank thresholds without a global sort — the ntile killer.
+/** EXACT ntile without a global sort — the ntile killer.
   *
   * `ntile(k) OVER (ORDER BY v, tie)` on one-row-per-document data plans as
   * a single-partition WindowExec: a total sort of the whole corpus through
   * ONE task (VERDICT r14 #1 — the one genuine 100 TB scale-killer found in
   * the pipeline family). But an ntile bucket is fully determined by the
   * (v, tie) value at each bucket-boundary RANK, and an exact value-at-rank
-  * needs no global sort — the [[TwoPassQuantile]] idiom, extended with the
-  * tie-break column so the boundary is a total-order point even under
-  * duplicate values:
-  *
-  *   pass 1 — histogram v into 2^binShift-wide bins (map-side-combined
-  *            hash agg; bins are value-range-bounded, not corpus-bounded,
-  *            so driver state stays tiny at any scale); fold cumulative
-  *            counts in rank order and locate, per requested rank k, the
-  *            bin holding it and the residual in-bin rank;
-  *   pass 2 — re-scan ONLY the target bins (selective filter; rows/bin
-  *            independent of corpus size for a fixed value range), rank
-  *            within each bin by (v [DESC], tie), and pick the residuals
-  *            via a broadcast join.
-  *
-  * The caller then tags every row by comparing (v, tie) against the
-  * returned boundary points — a pure map-side expression, zero shuffles.
-  * Result is bit-identical to the ntile: rank r belongs to bucket b iff
-  * r <= boundary_b, and (v, tie) comparison IS the rank comparison because
-  * the order is total.
+  * needs no global sort: a value-range histogram locates the bin holding
+  * each boundary rank, a rank inside that bin alone finds the boundary
+  * point, and every row is tagged by comparing its (v, tie) against the
+  * boundary points — the tie-break column makes the order total, so the
+  * result is bit-identical to the ntile. [[ntileLazy]] builds all of it as
+  * one lazy plan (no driver collect, no persist).
   *
   * Input columns must cast to BIGINT; arithmetic shiftright keeps negative
-  * values correctly ordered. The input is persisted for the two passes and
-  * released before return (callers re-derive it once more for the final
-  * tagging scan — two materializations total, the TwoPassQuantile
-  * contract).
+  * values correctly ordered.
   */
 object RankSplit {
-
-  /** Boundary (v, tie) points at the given 1-based ranks of
-    * `ORDER BY v [DESC], tie ASC`. Returns (n, points aligned with
-    * `ranksOf(n)`); ranks outside 1..n yield None. */
-  def thresholds(df: DataFrame, valueCol: String, tieCol: String, desc: Boolean,
-                 binShift: Int, ranksOf: Long => Seq[Long]): (Long, Seq[Option[(Long, Long)]]) = {
-    val vals = df.select(col(valueCol).cast("long").as("v"), col(tieCol).cast("long").as("tie"))
-      .withColumn("bin", shiftright(col("v"), binShift))
-      .persist()
-    try {
-      // pass 1: bounded histogram, cumulated in rank order (desc ⇒ high
-      // bins first)
-      val hist0 = vals.groupBy("bin").agg(count(lit(1)).as("cnt")).collect()
-        .map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1)
-      val hist = if (desc) hist0.reverse else hist0
-      val n = hist.map(_._2).sum
-      val wanted = ranksOf(n)
-      val targets = wanted.zipWithIndex.flatMap { case (k, qi) =>
-        if (k < 1 || k > n) None
-        else {
-          var cum = 0L
-          val (bin, before) = hist.collectFirst {
-            case (b, c) if { val ok = cum + c >= k; if (!ok) cum += c; ok } => (b, cum)
-          }.get
-          Some((qi, bin, k - before)) // residual rank inside the bin
-        }
-      }
-      if (targets.isEmpty) return (n, wanted.map(_ => None))
-      // pass 2: only target bins are re-read; per-bin sort, never global
-      val spark = df.sparkSession
-      import spark.implicits._
-      val t = spark.createDataset(targets).toDF("qi", "tbin", "inbin")
-      val ord: Seq[Column] = if (desc) Seq(col("v").desc, col("tie")) else Seq(col("v"), col("tie"))
-      val w = org.apache.spark.sql.expressions.Window.partitionBy("bin").orderBy(ord: _*)
-      val found = vals.filter(col("bin").isin(targets.map(_._2).distinct: _*))
-        .withColumn("rn", row_number().over(w))
-        .join(broadcast(t), col("bin") === col("tbin") && col("rn") === col("inbin"))
-        .select(col("qi"), col("v"), col("tie")).collect()
-        .map(r => r.getInt(0) -> (r.getLong(1), r.getLong(2))).toMap
-      (n, wanted.indices.map(found.get))
-    } finally vals.unpersist(blocking = false)
-  }
 
   /** Fully-LAZY exact ntile — one declarative DAG, one corpus scan.
     *
@@ -89,7 +31,7 @@ object RankSplit {
     * aggregate subtree, Spark's ReuseExchange computes the input's shuffle
     * ONCE and the other branches read the shuffle files (the TPC-DS
     * q14a-class mechanism; pinned by the golden plans' ReusedExchange-
-    * friendly shape and the bench A/B vs the eager two-pass form).
+    * friendly shape and RankSplitSpec's executed-plan checks).
     *
     * Structure:
     *   hist:    bin → count (bins are value-range-bounded, never
@@ -191,26 +133,4 @@ object RankSplit {
             (v === e.getField("v") && tie > e.getField("t"))))).cast("int"))
       .drop("_rs_ths")
   }
-
-  /** ntile(k) boundary RANKS: bucket b of `ntile(buckets)` over n rows ends
-    * at rank Σ_{i<=b} (n/buckets + (i <= n%buckets ? 1 : 0)) — the
-    * SQL-standard sizing Spark and DuckDB share. Returns the first
-    * `buckets - 1` cumulative boundaries (the last bucket needs none). */
-  def ntileBoundaryRanks(n: Long, buckets: Int): Seq[Long] = {
-    val base = n / buckets
-    val rem = n % buckets
-    (1 until buckets).map(b => base * b + math.min(b, rem))
-  }
-
-  /** Map-side tag: true iff (v, tie) ranks at-or-before the boundary point
-    * in `ORDER BY v [DESC], tie ASC` — the zero-shuffle replacement for
-    * `ntile(...) <= b`. A None boundary (rank out of range, e.g. an empty
-    * relation) tags nothing. */
-  def atOrBefore(v: Column, tie: Column, desc: Boolean, bound: Option[(Long, Long)]): Column =
-    bound match {
-      case None => lit(false)
-      case Some((bv, btie)) =>
-        val strictlyBefore = if (desc) v > bv else v < bv
-        strictlyBefore || (v === bv && tie <= btie)
-    }
 }

@@ -29,16 +29,9 @@ import org.apache.spark.sql.catalyst.rules.Rule
   * field directly). */
 object ScalarCrossBroadcast extends Rule[LogicalPlan] {
 
-  /** Measurement-only escape hatch for the A/B bench (VERDICT r13 #2):
-    * `SPARK_GRAFT_NO_SCALAR_CROSS=1` turns the rule into the identity so
-    * the same binary can record rule-off timings. Read once at class load —
-    * not a user-facing config. */
-  private val disabled: Boolean =
-    sys.env.get("SPARK_GRAFT_NO_SCALAR_CROSS").exists(v => v == "1" || v == "true")
-
   private def singleRow(p: LogicalPlan): Boolean = p.maxRows.contains(1L)
 
-  override def apply(plan: LogicalPlan): LogicalPlan = if (disabled) plan else plan.transformUp {
+  override def apply(plan: LogicalPlan): LogicalPlan = plan.transformUp {
     case j @ Join(l, r, Inner | Cross, None, hint)
         if hint.leftHint.isEmpty && hint.rightHint.isEmpty =>
       if (singleRow(r))

@@ -1,5 +1,6 @@
 package graft.sql
 
+import graft.streaming.StreamOps
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -638,13 +639,12 @@ final class EngineEnv(val spark: SparkSession, val catalogDir: Option[String] = 
       val statics = parsePartKv(partSpec)
       val df0 = alignToSink(sqlQuery(query), name, statics.keySet)
       val df = statics.foldLeft(df0) { case (d, (k, v)) => d.withColumn(k, lit(v)) }
-      val prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode")
-      spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-      try df.repartition(spec.partitions.map(col): _*)
-        .write.partitionBy(spec.partitions: _*)
-        .mode(if (mode.equalsIgnoreCase("OVERWRITE")) "overwrite" else "append")
-        .format(spec.format).save(spec.path)
-      finally spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+      StreamOps.withConf(spark, "spark.sql.sources.partitionOverwriteMode" -> "dynamic") {
+        df.repartition(spec.partitions.map(col): _*)
+          .write.partitionBy(spec.partitions: _*)
+          .mode(if (mode.equalsIgnoreCase("OVERWRITE")) "overwrite" else "append")
+          .format(spec.format).save(spec.path)
+      }
       register(name, spec)
       spark.emptyDataFrame
     // INSERT INTO/OVERWRITE a registered filesystem table — the reference's
@@ -1212,8 +1212,7 @@ final class EngineEnv(val spark: SparkSession, val catalogDir: Option[String] = 
         // are special-cased to AvroFormat) — stage a one-shot parquet
         // snapshot and stream that, like the CDC staged-text path
         val snap = graft.sources.AvroFormat.read(spark, spec.path)
-        val dir = s"${graft.streaming.StreamOps.scratchRoot}/avro_stream/" +
-          spec.path.replaceAll("[^A-Za-z0-9]", "_")
+        val dir = s"${StreamOps.scratchRoot}/avro_stream/${StreamOps.san(spec.path)}"
         snap.write.mode("overwrite").parquet(dir)
         spark.readStream.schema(snap.schema).parquet(dir)
       } else {
@@ -1235,16 +1234,13 @@ final class EngineEnv(val spark: SparkSession, val catalogDir: Option[String] = 
   def watermarkOf(name: String): Option[(String, String)] =
     catalog.get(keyOf(name)).flatMap(s => s.watermarkCol.zip(s.watermarkDelay))
 
-  private def read(path: String, fmt: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    fmt match {
-      case "csv" => spark.read.option("header", "true").option("inferSchema", "true").csv(path)
-      case "json" => spark.read.json(path)
-      // no spark-avro DataSource in the container — the Hadoop-format
-      // implementation covers batch reads (ref flink-formats/flink-avro)
-      case "avro" => graft.sources.AvroFormat.read(spark, path)
-      case _ => spark.read.format(fmt).load(path)
-    }
+  private def read(path: String, fmt: String): DataFrame = fmt match {
+    case "csv" => spark.read.option("header", "true").option("inferSchema", "true").csv(path)
+    case "json" => spark.read.json(path)
+    // no spark-avro DataSource in the container — the Hadoop-format
+    // implementation covers batch reads (ref flink-formats/flink-avro)
+    case "avro" => graft.sources.AvroFormat.read(spark, path)
+    case _ => spark.read.format(fmt).load(path)
   }
 
   private def unitName(u: String): String = u.toLowerCase match {

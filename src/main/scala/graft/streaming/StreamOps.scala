@@ -2,6 +2,7 @@ package graft.streaming
 
 import graft.operators.Cep
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.TransformWithState
 import org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
@@ -30,7 +31,10 @@ object StreamOps {
   val scratchRoot: String =
     if (new java.io.File("/dev/shm").isDirectory) "/dev/shm/graft" else "/tmp/graft"
 
-  /** Stream the given fixture table. */
+  /** A path (usually a fixture dir) as a file-name-safe token, so scratch
+    * dirs, staged-batch ids and query names are per fixture. */
+  def san(path: String): String = path.replaceAll("[^A-Za-z0-9]", "_")
+
   /** The file stream source wants a directory; the fixtures are single
     * files → expose a file through a per-file temp dir via symlink
     * (read-only fixtures stay untouched). Returns the path unchanged if it
@@ -39,7 +43,7 @@ object StreamOps {
     val p = java.nio.file.Paths.get(path)
     if (java.nio.file.Files.isDirectory(p)) return path
     val linkDir = java.nio.file.Paths.get(
-      s"$scratchRoot/stream/${path.replaceAll("[^A-Za-z0-9]", "_")}")
+      s"$scratchRoot/stream/${san(path)}")
     java.nio.file.Files.createDirectories(linkDir)
     val link = linkDir.resolve(p.getFileName)
     if (!java.nio.file.Files.exists(link)) java.nio.file.Files.createSymbolicLink(link, p)
@@ -51,13 +55,7 @@ object StreamOps {
     * deterministic micro-batches (oldest first). Returns the source dir. */
   def stageBatches(s: SparkSession, id: String, batches: Seq[DataFrame]): String = {
     val base = java.nio.file.Paths.get(s"$scratchRoot/batches/$id")
-    if (java.nio.file.Files.exists(base)) {
-      import scala.jdk.CollectionConverters._
-      val w = java.nio.file.Files.walk(base)
-      try w.sorted(java.util.Comparator.reverseOrder())
-        .iterator().asScala.foreach(p => java.nio.file.Files.deleteIfExists(p))
-      finally w.close()
-    }
+    wipe(base.toString)
     val srcDir = base.resolve("src")
     java.nio.file.Files.createDirectories(srcDir)
     batches.zipWithIndex.foreach { case (df, i) =>
@@ -75,6 +73,13 @@ object StreamOps {
     srcDir.toString
   }
 
+  /** Replay `batches` as a file stream, one micro-batch each, in order:
+    * [[stageBatches]] under `id` plus the sanitized fixture `dir`, read
+    * back one file per trigger. */
+  def replay(s: SparkSession, id: String, dir: String, batches: Seq[DataFrame]): DataFrame =
+    s.readStream.schema(batches.head.schema).option("maxFilesPerTrigger", "1")
+      .parquet(stageBatches(s, s"${id}_${san(dir)}", batches))
+
   def readTable(s: SparkSession, dir: String, table: String): DataFrame = {
     val path = s"$dir/$table.parquet"
     val schema = s.read.parquet(path).schema
@@ -90,20 +95,20 @@ object StreamOps {
     * materialized result.
     *
     * CONTRACT: the returned DataFrame is eagerly analyzed and stays valid,
-    * but the backing temp view is dropped after `graft.memtable.keep`
-    * (default 4) further runToMemory calls — callers must NOT re-resolve a
-    * result by name (`spark.table(...)`) later; hold the returned
-    * DataFrame instead. A multi-run spec harness that needs more live
-    * results raises the sys-prop. */
+    * but the backing temp view is dropped after [[MemTablesKept]] further
+    * runToMemory calls — callers must NOT re-resolve a result by name
+    * (`spark.table(...)`) later; hold the returned DataFrame instead. */
   private val liveMemTables = scala.collection.mutable.Queue[String]()
+
+  /** Recent memory-sink tables kept live: a caller — or a multi-run spec
+    * harness — may still hold their DataFrames; older ones have been
+    * consumed. */
+  private val MemTablesKept = 4
 
   def runToMemory(s: SparkSession, df: DataFrame, mode: OutputMode): DataFrame = {
     liveMemTables.synchronized {
-      // keep a few recent tables (a caller — or a multi-run spec harness —
-      // may still hold their DataFrames); older ones have been consumed,
-      // so drop view + sink rows
-      val keep = sys.props.getOrElse("graft.memtable.keep", "4").toInt
-      while (liveMemTables.size > keep) s.catalog.dropTempView(liveMemTables.dequeue())
+      // drop the view + sink rows of consumed tables
+      while (liveMemTables.size > MemTablesKept) s.catalog.dropTempView(liveMemTables.dequeue())
     }
     val name = s"graft_mem_${counter.incrementAndGet()}"
     // per-JVM-unique dir, wiped before AND after the run: a stale checkpoint
@@ -111,7 +116,7 @@ object StreamOps {
     // and silently skip this run's staged batches
     val ckpt = s"$scratchRoot/ckpt/${ProcessHandle.current().pid()}/$name"
     wipe(ckpt)
-    try withStreamingConf(s) {
+    try withStreamingConf(df) {
       df.writeStream.format("memory").queryName(name)
         .option("checkpointLocation", ckpt)
         .outputMode(mode).trigger(Trigger.AvailableNow()).start()
@@ -121,10 +126,27 @@ object StreamOps {
     s.table(name)
   }
 
-  /** Run `body` — the start and await of one engine streaming query — under
-    * the two session settings every engine query uses, then restore their
-    * previous values (also when `body` throws). Every `DataStreamWriter.start()`
-    * of the engine runs inside this helper.
+  /** Run `body` with each of `settings` set on the session, then restore
+    * every previous value: a conf that was unset is unset again (not set
+    * to its default, so `spark.conf.getAll` comes back unchanged). Restores
+    * also when `body` (or a set) throws. Every temporary change of a
+    * session setting in the engine goes through here. */
+  def withConf[T](s: SparkSession, settings: (String, String)*)(body: => T): T = {
+    val explicit = s.conf.getAll // without defaults, unlike getOption
+    val prev = settings.map { case (k, _) => k -> explicit.get(k) }
+    try {
+      settings.foreach { case (k, v) => s.conf.set(k, v) }
+      body
+    } finally prev.foreach {
+      case (k, Some(v)) => s.conf.set(k, v)
+      case (k, None) => s.conf.unset(k)
+    }
+  }
+
+  /** Run `body` — the start and await of the streaming query `df` — under
+    * the session settings an engine query uses, restored afterwards by
+    * [[withConf]]. Every `DataStreamWriter.start()` of the engine runs
+    * inside this helper.
     *  - `spark.sql.shuffle.partitions` = `graft.stream.parts` (default 4).
     *    Each shuffle partition is one state-store instance that writes its
     *    delta file every micro-batch, so the per-batch checkpoint cost
@@ -136,19 +158,20 @@ object StreamOps {
     *    renames with a plain `File.renameTo`. Writes still go through the
     *    checksummed LocalFileSystem, so Hadoop `.crc` files and Spark's
     *    checkpoint-file checksums stay. The engine's checkpoints are all
-    *    local (under `scratchRoot` or the JVM temp dir). */
-  def withStreamingConf[T](s: SparkSession)(body: => T): T = {
+    *    local (under `scratchRoot` or the JVM temp dir).
+    *  - The RocksDB state-store provider when `df`'s plan has a
+    *    `transformWithState` node (Flink's keyed-state surface, which
+    *    Spark runs only on RocksDB); every other query keeps the session's
+    *    provider. The state backend is a per-query choice, as in Flink. */
+  def withStreamingConf[T](df: DataFrame)(body: => T): T = {
     val settings = Seq(
       "spark.sql.shuffle.partitions" -> sys.props.getOrElse("graft.stream.parts", "4"),
       "spark.sql.streaming.checkpointFileManagerClass" ->
         classOf[FileSystemBasedCheckpointFileManager].getName)
-    val prev = settings.map { case (k, _) => k -> s.conf.getOption(k) }
-    settings.foreach { case (k, v) => s.conf.set(k, v) }
-    try body
-    finally prev.foreach {
-      case (k, Some(v)) => s.conf.set(k, v)
-      case (k, None) => s.conf.unset(k)
-    }
+    val tws = df.queryExecution.logical.exists(_.isInstanceOf[TransformWithState])
+    val provider = Option.when(tws)("spark.sql.streaming.stateStore.providerClass" ->
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    withConf(df.sparkSession, settings ++ provider: _*)(body)
   }
 
   /** Queryable-state analog — ref flink-queryable-state
@@ -832,7 +855,7 @@ object StreamOps {
     * fMGWS case-class blob — per user: ValueState = running count,
     * ListState = newest-first last-3 cents ring, MapState = per-event-type
     * counts; one output row per input row. TWS requires the RocksDB state
-    * store (the caller sets the provider conf — see twsKeyedProcess).
+    * store (`withStreamingConf` sets it for a plan with a TWS node).
     * In-batch rows walk in (ts, event_id) order → deterministic. */
   class KeyedStateProcessor extends org.apache.spark.sql.streaming.StatefulProcessor[
       Long, (Long, Long, Long, Long, String), TwsOut] {
@@ -892,8 +915,6 @@ object StreamOps {
   /** Run [[TtlCounterProcessor]] (processing-time mode — TTL requires it). */
   def twsTtlCounter(s: SparkSession, events: DataFrame, ttlMs: Long): DataFrame = {
     import s.implicits._
-    s.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     events
       .select(col("user_id").cast("long").as("_1"), col("event_id").cast("long").as("_2"))
       .as[(Long, Long)]
@@ -943,8 +964,6 @@ object StreamOps {
     * ts column). */
   def twsInactivityAlert(s: SparkSession, events: DataFrame, gapMs: Long): DataFrame = {
     import s.implicits._
-    s.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     events
       .select(col("user_id").cast("long").as("_1"), col("ts").cast("timestamp").as("_2"))
       .withWatermark("_2", "0 seconds")
@@ -957,13 +976,12 @@ object StreamOps {
       .toDF()
   }
 
-  /** Run [[KeyedStateProcessor]] over the events stream. Sets the RocksDB
-    * state-store provider (transformWithState requires it; also the
-    * production-scale choice — incremental snapshots, off-heap state). */
+  /** Run [[KeyedStateProcessor]] over the events stream. Started through
+    * [[withStreamingConf]], it runs on the RocksDB state-store provider
+    * (transformWithState requires it; also the production-scale choice —
+    * incremental snapshots, off-heap state). */
   def twsKeyedProcess(s: SparkSession, events: DataFrame): DataFrame = {
     import s.implicits._
-    s.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     events
       .select(col("user_id").cast("long").as("_1"), col("event_id").cast("long").as("_2"),
               expr("unix_micros(ts)").as("_3"),
@@ -1324,7 +1342,7 @@ object StreamOps {
     wipe(outDir)
     var wmSec = Long.MinValue
     val committed = scala.collection.mutable.Set[Long]()
-    withStreamingConf(s)(src.writeStream
+    withStreamingConf(src)(src.writeStream
       .foreachBatch { (df: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
         val withP = df.withColumn("p_bucket",
           (floor(unix_timestamp(col("ts").cast("timestamp")) / bucketSec) * bucketSec).cast("long"))

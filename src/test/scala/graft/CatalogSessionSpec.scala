@@ -84,4 +84,18 @@ class CatalogSessionSpec extends SparkTestBase {
       assert(!plan.contains("InMemoryTableScan"), s"$q: reads a cache\n$plan")
     }
   }
+
+  test("an EngineEnv filesystem table leaves the session conf, so registerAll does not rebind") {
+    val s = spark.newSession()
+    Tables.registerAll(s, sfDir)
+    val orders = rel(s, "orders")
+    val before = s.conf.getAll
+    val e = new graft.sql.EngineEnv(s)
+    e.executeSql(s"""CREATE TABLE conf_t WITH ('connector'='filesystem',
+      'path'='$sfDir/region.parquet', 'format'='parquet')""")
+    assert(e.sqlQuery("SELECT COUNT(*) AS n FROM conf_t").head().getLong(0) == 5)
+    assert(s.conf.getAll == before)
+    Tables.registerAll(s, sfDir)
+    assert(rel(s, "orders") eq orders, "a conf change made registerAll reload the fixtures")
+  }
 }

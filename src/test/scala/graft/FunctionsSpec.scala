@@ -1,6 +1,7 @@
 package graft
 
 import graft.functions.FlinkFunctions
+import graft.streaming.StreamOps
 import org.apache.spark.sql.functions._
 
 /** Flink-name function surface: scalar wrappers + SINGLE_VALUE error
@@ -79,14 +80,11 @@ class FunctionsSpec extends SparkTestBase {
     FlinkFunctions.registerAll(s)
     // with fallback disabled a doGenCode compile error fails the query
     // instead of silently degrading to the interpreted path
-    val prev = s.conf.getOption("spark.sql.codegen.fallback")
-    s.conf.set("spark.sql.codegen.fallback", "false")
-    try {
+    StreamOps.withConf(s, "spark.sql.codegen.fallback" -> "false") {
       val out = Seq(("a,b,c", 1)).toDF("str", "i")
         .selectExpr("SPLIT_INDEX(str, ',', i) AS p").as[String].collect().toSeq
       assert(out == Seq("b"))
-    } finally prev.fold(s.conf.unset("spark.sql.codegen.fallback"))(
-      v => s.conf.set("spark.sql.codegen.fallback", v))
+    }
   }
 
   test("SINGLE_VALUE returns the value for 1-row groups") {

@@ -1,5 +1,6 @@
 package graft
 
+import graft.streaming.StreamOps
 import org.apache.spark.sql.DataFrame
 
 /** Mechanical re-execution pins for EVERY iterative graph loop (VERDICT
@@ -30,12 +31,8 @@ class LoopStageBoundSpec extends SparkTestBase {
     buf.toSeq.toDF("src", "dst")
   }
 
-  private def withPartitionedPath[T](body: => T): T = {
-    val key = "graft.graph.broadcastMaxRows"
-    spark.conf.set(key, "0")
-    try body
-    finally spark.conf.unset(key)
-  }
+  private def withPartitionedPath[T](body: => T): T =
+    StreamOps.withConf(spark, "graft.graph.broadcastMaxRows" -> "0")(body)
 
   private def check(name: String, bound: Int, part: Boolean)(algo: DataFrame => DataFrame): Unit = {
     val run = () => {

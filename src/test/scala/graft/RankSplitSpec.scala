@@ -4,46 +4,12 @@ import graft.operators.RankSplit
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-/** RankSplit (the two-pass ntile replacement, VERDICT r14 #1) must be
+/** `RankSplit.ntileLazy` (the no-global-sort ntile replacement) must be
   * bit-identical to `ntile(k) OVER (ORDER BY v [DESC], tie)` — verified
   * differentially against Spark's own ntile over random data: negative
-  * values, heavy ties, n ≡ 0/1/…/k-1 (mod k), tiny n, both directions. */
+  * values, heavy ties, all-equal values, empty input, n ≡ 0/1/…/k-1
+  * (mod k), tiny n, both directions. */
 class RankSplitSpec extends SparkTestBase {
-
-  private def checkAgainstNtile(vs: Seq[(Long, Long)], buckets: Int, desc: Boolean): Unit = {
-    val s = spark
-    import s.implicits._
-    val df = vs.toDF("v", "tie")
-    val ord = if (desc) Seq(col("v").desc, col("tie")) else Seq(col("v"), col("tie"))
-    val expected = df.withColumn("b", ntile(buckets).over(Window.orderBy(ord: _*)))
-      .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getInt(2)).toMap
-    val (n, bounds) = RankSplit.thresholds(df, "v", "tie", desc, binShift = 4,
-      nn => RankSplit.ntileBoundaryRanks(nn, buckets))
-    assert(n == vs.size.toLong)
-    val tagged = df.withColumn("b",
-      bounds.zipWithIndex.foldRight(lit(buckets)) { case ((bd, i), rest) =>
-        when(RankSplit.atOrBefore(col("v"), col("tie"), desc, bd), i + 1).otherwise(rest)
-      })
-      .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getInt(2)).toMap
-    assert(tagged == expected, s"buckets=$buckets desc=$desc n=${vs.size}")
-  }
-
-  test("differential vs ntile: random data, ties, negatives, all n mod k residues") {
-    val rnd = new scala.util.Random(20260816L)
-    for (n <- Seq(1, 2, 3, 4, 5, 7, 12, 97, 100, 101, 102, 103); k <- Seq(2, 3, 4);
-         desc <- Seq(true, false)) {
-      // values from a small domain to force cross-bin and in-bin ties;
-      // tie keys unique (the per-doc contract)
-      val vs = Seq.tabulate(n)(i => (rnd.nextInt(40).toLong - 20L, i.toLong))
-      checkAgainstNtile(vs, k, desc)
-    }
-  }
-
-  test("all-equal values: bucket split rides entirely on the tie key") {
-    val vs = Seq.tabulate(10)(i => (7L, i.toLong))
-    checkAgainstNtile(vs, 3, desc = true)
-    checkAgainstNtile(vs, 4, desc = false)
-  }
 
   private def checkLazyAgainstNtile(vs: Seq[(Long, Long)], buckets: Int, desc: Boolean): Unit = {
     val s = spark
@@ -104,23 +70,5 @@ class RankSplitSpec extends SparkTestBase {
       val scans = "Scan parquet".r.findAllIn(plan).length
       assert(scans <= 2, s"$q: expected <=2 document scans (score + fit), got $scans:\n$plan")
     }
-  }
-
-  test("empty relation: no thresholds, nothing tagged") {
-    val s = spark
-    import s.implicits._
-    val df = Seq.empty[(Long, Long)].toDF("v", "tie")
-    val (n, bounds) = RankSplit.thresholds(df, "v", "tie", desc = true, 4,
-      nn => RankSplit.ntileBoundaryRanks(nn, 4).take(1))
-    assert(n == 0L && bounds == Seq(None))
-    assert(df.filter(RankSplit.atOrBefore(col("v"), col("tie"), desc = true, bounds.head))
-      .count() == 0L)
-  }
-
-  test("ntileBoundaryRanks matches the SQL bucket sizing") {
-    assert(RankSplit.ntileBoundaryRanks(10, 3) == Seq(4, 7))   // sizes 4,3,3
-    assert(RankSplit.ntileBoundaryRanks(12, 4) == Seq(3, 6, 9)) // even split
-    assert(RankSplit.ntileBoundaryRanks(1, 3) == Seq(1, 1))    // 1,0,0
-    assert(RankSplit.ntileBoundaryRanks(0, 4) == Seq(0, 0, 0)) // all out of range
   }
 }

@@ -1,5 +1,6 @@
 package graft
 
+import graft.streaming.StreamOps
 import org.apache.spark.sql.functions._
 
 /** Round-10 specs: the iterative graph loops' shuffle width follows the
@@ -27,19 +28,16 @@ class Round10Spec extends SparkTestBase {
     * partition count IS the loop's exchange width (AQE off so no
     * post-shuffle coalesce hides it). */
   private def loopWidth(parts: Option[String], ambient: String): Int = {
-    val conf = spark.conf
-    val prev = conf.get("spark.sql.shuffle.partitions")
-    val prevAqe = conf.get("spark.sql.adaptive.enabled")
-    conf.set("spark.sql.adaptive.enabled", "false")
-    conf.set("spark.sql.shuffle.partitions", ambient)
-    conf.set("graft.graph.broadcastMaxRows", "0") // force the partitioned path
-    parts.foreach(conf.set("graft.graph.loopShufflePartitions", _))
-    try graft.operators.GraphOps.pageRank(lcgEdges(40), iters = 2).rdd.getNumPartitions
-    finally {
-      conf.unset("graft.graph.broadcastMaxRows")
-      conf.unset("graft.graph.loopShufflePartitions")
-      conf.set("spark.sql.shuffle.partitions", prev)
-      conf.set("spark.sql.adaptive.enabled", prevAqe)
+    val settings = Seq(
+      "spark.sql.adaptive.enabled" -> "false",
+      "spark.sql.shuffle.partitions" -> ambient,
+      "graft.graph.broadcastMaxRows" -> "0") ++ // force the partitioned path
+      parts.map("graft.graph.loopShufflePartitions" -> _)
+    StreamOps.withConf(spark, settings: _*) {
+      val n = graft.operators.GraphOps.pageRank(lcgEdges(40), iters = 2).rdd.getNumPartitions
+      assert(spark.conf.get("spark.sql.shuffle.partitions") == ambient,
+        "loop override leaked into the session conf")
+      n
     }
   }
 
@@ -49,10 +47,8 @@ class Round10Spec extends SparkTestBase {
   }
 
   test("graft.graph.loopShufflePartitions narrows the loop width and is restored") {
-    val before = spark.conf.get("spark.sql.shuffle.partitions")
+    // loopWidth checks the ambient width is back once the loop returns
     assert(loopWidth(Some("3"), ambient = "7") == 3)
-    assert(spark.conf.get("spark.sql.shuffle.partitions") == before,
-      "loop override leaked into the session conf")
   }
 
   /** The avgDigits oracle emulation (TpcdsVerbatim2Queries): the HUGEINT

@@ -1,5 +1,6 @@
 package graft
 
+import graft.streaming.StreamOps
 import java.util.concurrent.atomic.{AtomicBoolean, AtomicInteger}
 
 /** Round-11 specs: partitionEdges' AQE-off pinning materialization runs on
@@ -25,7 +26,6 @@ class Round11Spec extends SparkTestBase {
     Queries.all
     val conf = spark.conf
     assert(conf.get("spark.sql.adaptive.enabled") == "true")
-    conf.set("graft.graph.broadcastMaxRows", "0") // force the partitioned path
     val sawOff = new AtomicBoolean(false)
     val polls = new AtomicInteger(0)
     val stop = new AtomicBoolean(false)
@@ -36,13 +36,11 @@ class Round11Spec extends SparkTestBase {
       }
     })
     poller.start()
-    try {
+    // force the partitioned path
+    try StreamOps.withConf(spark, "graft.graph.broadcastMaxRows" -> "0") {
       val pr = graft.operators.GraphOps.pageRank(lcgEdges(40), iters = 3)
       assert(pr.count() > 0)
-    } finally {
-      stop.set(true); poller.join()
-      conf.unset("graft.graph.broadcastMaxRows")
-    }
+    } finally { stop.set(true); poller.join() }
     assert(polls.get() > 1000, s"poller only ran ${polls.get()} times — vacuous race")
     assert(!sawOff.get(), "a concurrent thread observed spark.sql.adaptive.enabled=false " +
       "during a partitioned graph loop — partitionEdges leaked its conf flip")
@@ -50,12 +48,11 @@ class Round11Spec extends SparkTestBase {
 
   test("the pinning sub-session does not leak global temp views") {
     Queries.all
-    spark.conf.set("graft.graph.broadcastMaxRows", "0")
-    try {
+    StreamOps.withConf(spark, "graft.graph.broadcastMaxRows" -> "0") {
       graft.operators.GraphOps.pageRank(lcgEdges(30), iters = 2).count()
       val leftover = spark.sql("SHOW TABLES IN global_temp")
         .collect().map(_.getString(1)).filter(_.startsWith("graft_pin_"))
       assert(leftover.isEmpty, s"leaked global temp views: ${leftover.mkString(",")}")
-    } finally spark.conf.unset("graft.graph.broadcastMaxRows")
+    }
   }
 }

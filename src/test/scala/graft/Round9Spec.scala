@@ -1,5 +1,6 @@
 package graft
 
+import graft.streaming.StreamOps
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -32,12 +33,8 @@ class Round9Spec extends SparkTestBase {
     buf.toSeq.toDF("src", "dst")
   }
 
-  private def withPartitionedPath[T](body: => T): T = {
-    val key = "graft.graph.broadcastMaxRows"
-    spark.conf.set(key, "0")
-    try body
-    finally spark.conf.unset(key)
-  }
+  private def withPartitionedPath[T](body: => T): T =
+    StreamOps.withConf(spark, "graft.graph.broadcastMaxRows" -> "0")(body)
 
   test("iterative graph loops: partitioned path equals broadcast path") {
     val edges = lcgEdges(60)
@@ -63,9 +60,9 @@ class Round9Spec extends SparkTestBase {
     // AQE off for the one pinning materialization (an adaptive plan
     // reports UnknownPartitioning at checkpoint capture) — the same step
     // GraphOps.partitionEdges performs; the joins below run with AQE on
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    val ce = try bi.repartition(col("u")).localCheckpoint()
-             finally spark.conf.set("spark.sql.adaptive.enabled", "true")
+    val ce = StreamOps.withConf(spark, "spark.sql.adaptive.enabled" -> "false") {
+      bi.repartition(col("u")).localCheckpoint()
+    }
     // the checkpoint pins the hash partitioning in the scan node — the
     // property that lets every later iteration skip the edge-side exchange
     val scanPart = ce.queryExecution.executedPlan.collectLeaves().head.outputPartitioning

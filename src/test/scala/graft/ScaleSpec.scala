@@ -1,6 +1,7 @@
 package graft
 
 import graft.operators.SkewJoin
+import graft.streaming.StreamOps
 import org.apache.spark.sql.functions._
 
 /** Scale-pattern evidence: bucketed co-located joins (no shuffle), salted
@@ -10,30 +11,31 @@ class ScaleSpec extends SparkTestBase {
 
   test("bucketed tables join without a shuffle exchange") {
     val s = spark
-    s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1") // force non-broadcast
-    // drop tables AND their warehouse dirs (a fresh in-memory metastore
-    // doesn't know about locations left by a previous test JVM)
-    Seq("orders_bkt", "customer_bkt").foreach { t =>
-      s.sql(s"DROP TABLE IF EXISTS $t")
-      val loc = java.nio.file.Paths.get(s"spark-warehouse/$t")
-      if (java.nio.file.Files.exists(loc)) {
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(loc).sorted(java.util.Comparator.reverseOrder())
-          .iterator().asScala.foreach(p => java.nio.file.Files.deleteIfExists(p))
+    // force non-broadcast
+    StreamOps.withConf(s, "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
+      // drop tables AND their warehouse dirs (a fresh in-memory metastore
+      // doesn't know about locations left by a previous test JVM)
+      Seq("orders_bkt", "customer_bkt").foreach { t =>
+        s.sql(s"DROP TABLE IF EXISTS $t")
+        val loc = java.nio.file.Paths.get(s"spark-warehouse/$t")
+        if (java.nio.file.Files.exists(loc)) {
+          import scala.jdk.CollectionConverters._
+          java.nio.file.Files.walk(loc).sorted(java.util.Comparator.reverseOrder())
+            .iterator().asScala.foreach(p => java.nio.file.Files.deleteIfExists(p))
+        }
       }
+      Tables.load(s, sfDir, "orders").write.mode("overwrite")
+        .bucketBy(8, "o_custkey").sortBy("o_custkey").saveAsTable("orders_bkt")
+      Tables.load(s, sfDir, "customer").write.mode("overwrite")
+        .bucketBy(8, "c_custkey").sortBy("c_custkey").saveAsTable("customer_bkt")
+      val joined = s.table("orders_bkt")
+        .join(s.table("customer_bkt"), col("o_custkey") === col("c_custkey"))
+      val plan = joined.queryExecution.executedPlan.toString
+      // co-located bucketed join: the join itself needs no Exchange on either side
+      assert(!plan.contains("Exchange hashpartitioning"),
+        s"bucketed join still shuffles:\n$plan")
+      assert(joined.count() > 0)
     }
-    Tables.load(s, sfDir, "orders").write.mode("overwrite")
-      .bucketBy(8, "o_custkey").sortBy("o_custkey").saveAsTable("orders_bkt")
-    Tables.load(s, sfDir, "customer").write.mode("overwrite")
-      .bucketBy(8, "c_custkey").sortBy("c_custkey").saveAsTable("customer_bkt")
-    val joined = s.table("orders_bkt")
-      .join(s.table("customer_bkt"), col("o_custkey") === col("c_custkey"))
-    val plan = joined.queryExecution.executedPlan.toString
-    // co-located bucketed join: the join itself needs no Exchange on either side
-    assert(!plan.contains("Exchange hashpartitioning"),
-      s"bucketed join still shuffles:\n$plan")
-    assert(joined.count() > 0)
-    s.conf.unset("spark.sql.autoBroadcastJoinThreshold")
   }
 
   test("salted join result equals the plain join") {
@@ -86,16 +88,13 @@ class ScaleSpec extends SparkTestBase {
   test("AQE splits a skewed join partition at runtime (OptimizeSkewedJoin)") {
     val s = spark
     import s.implicits._
-    val prev = Seq("spark.sql.autoBroadcastJoinThreshold",
-      "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes",
-      "spark.sql.adaptive.advisoryPartitionSizeInBytes",
-      "spark.sql.shuffle.partitions").map(k => k -> s.conf.get(k))
-    try {
-      s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1") // force shuffle join
-      // tiny thresholds so the fixture-scale skew actually trips the rule
-      s.conf.set("spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes", "32KB")
-      s.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "16KB")
-      s.conf.set("spark.sql.shuffle.partitions", "8")
+    // force a shuffle join; tiny thresholds so the fixture-scale skew
+    // actually trips the rule
+    StreamOps.withConf(s,
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+      "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "32KB",
+      "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "16KB",
+      "spark.sql.shuffle.partitions" -> "8") {
       // 95% of the left rows share one key — the classic hot-key join
       val left = s.range(200000L)
         .select(when(col("id") % 20 =!= 0, lit(7L)).otherwise(col("id") % 100).as("k"),
@@ -107,7 +106,7 @@ class ScaleSpec extends SparkTestBase {
       assert(joined.queryExecution.toRdd.count() == 200000L)
       val finalPlan = joined.queryExecution.executedPlan.toString
       assert(finalPlan.contains("skew="), s"expected a skew-join rewrite marker:\n${finalPlan.take(800)}")
-    } finally prev.foreach { case (k, v) => s.conf.set(k, v) }
+    }
   }
 
   test("dynamic partition pruning: a dim filter prunes fact partitions at runtime") {
@@ -144,12 +143,10 @@ class ScaleSpec extends SparkTestBase {
   test("q_pipe_split is partitioning-invariant: same manifest at 2 and 32 shuffle partitions") {
     // the replayability contract: a hash-gated split never depends on
     // cluster size / task layout — the exact property RNG sampling lacks
-    val run = (parts: String) => {
-      val prev = spark.conf.get("spark.sql.shuffle.partitions")
-      spark.conf.set("spark.sql.shuffle.partitions", parts)
-      try SparkEntry.queries("q_pipe_split")(spark, sfDir).collect().toSeq
-      finally spark.conf.set("spark.sql.shuffle.partitions", prev)
-    }
+    val run = (parts: String) =>
+      StreamOps.withConf(spark, "spark.sql.shuffle.partitions" -> parts) {
+        SparkEntry.queries("q_pipe_split")(spark, sfDir).collect().toSeq
+      }
     assert(run("2") == run("32"))
   }
 
@@ -158,12 +155,10 @@ class ScaleSpec extends SparkTestBase {
     // a window election — each individually order-sensitive if written
     // wrong; identical output at 2 and 32 shuffle partitions pins the
     // whole chain to deterministic integer/tie-broken math
-    val run = (name: String, parts: String) => {
-      val prev = spark.conf.get("spark.sql.shuffle.partitions")
-      spark.conf.set("spark.sql.shuffle.partitions", parts)
-      try SparkEntry.queries(name)(spark, sfDir).collect().toSeq
-      finally spark.conf.set("spark.sql.shuffle.partitions", prev)
-    }
+    val run = (name: String, parts: String) =>
+      StreamOps.withConf(spark, "spark.sql.shuffle.partitions" -> parts) {
+        SparkEntry.queries(name)(spark, sfDir).collect().toSeq
+      }
     assert(run("q_pipe_incremental_dedup", "2") == run("q_pipe_incremental_dedup", "32"))
     assert(run("q_pipe_dedup_keep_best", "2") == run("q_pipe_dedup_keep_best", "32"))
   }

@@ -1,6 +1,7 @@
 package graft
 
 import graft.sql.{EngineEnv, FlinkSqlDialect}
+import graft.streaming.StreamOps
 
 /** SqlExpressionTest mirror — the reference's documented-SQL-surface
   * expectation table (flink-table-planner-blink SqlExpressionTest.scala,
@@ -314,13 +315,11 @@ class SqlExpressionFidelitySpec extends SparkTestBase {
     // the MySQL-documented DST mapping the reference pins under MET
     // (TemporalTypesTest.testDaylightSavingTimeZone): two distinct local
     // times map to ONE epoch second across the spring-forward gap
-    val prev = spark.conf.get("spark.sql.session.timeZone")
-    try {
-      spark.conf.set("spark.sql.session.timeZone", "MET")
+    StreamOps.withConf(spark, "spark.sql.session.timeZone" -> "MET") {
       check("UNIX_TIMESTAMP('2005-03-27 03:00:00')" , "1111885200")
       check("UNIX_TIMESTAMP('2005-03-27 02:00:00')" , "1111885200")
       check("FROM_UNIXTIME(1111885200)", "2005-03-27 03:00:00")
-    } finally spark.conf.set("spark.sql.session.timeZone", prev)
+    }
   }
 
   test("datetime long tail 2: FROM_UNIXTIME formats + zones, TO_TIMESTAMP null-on-invalid") {
@@ -348,12 +347,10 @@ class SqlExpressionFidelitySpec extends SparkTestBase {
       "CAST(CEIL(CAST(NULL AS TIMESTAMP) TO DAY) AS STRING)" -> "null",
     ).foreach { case (e, want) => check(e, want) }
     // TemporalTypesTest.testFromUnixTimeInTokyo — session-zone rendering
-    val prev = spark.conf.get("spark.sql.session.timeZone")
-    try {
-      spark.conf.set("spark.sql.session.timeZone", "Asia/Tokyo")
+    StreamOps.withConf(spark, "spark.sql.session.timeZone" -> "Asia/Tokyo") {
       check("FROM_UNIXTIME(44)", "1970-01-01 09:00:44")
       check("FROM_UNIXTIME(44, 'yy-MM-dd HH-mm-ss')", "70-01-01 09-00-44")
-    } finally spark.conf.set("spark.sql.session.timeZone", prev)
+    }
   }
 
   test("hash rows") {

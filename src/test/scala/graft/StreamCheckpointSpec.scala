@@ -12,10 +12,12 @@ import scala.jdk.CollectionConverters._
 /** Engine streaming queries write their checkpoints through Spark's
   * FileSystem checkpoint manager (`StreamOps.withStreamingConf`): no
   * Hadoop `readlink` subprocess per checkpoint file, recovery and both
-  * checksum sidecars intact, and the session's settings restored. */
+  * checksum sidecars intact, a transformWithState query on RocksDB, and
+  * the session's settings restored (`StreamOps.withConf`). */
 class StreamCheckpointSpec extends SparkTestBase {
 
   private val ManagerKey = "spark.sql.streaming.checkpointFileManagerClass"
+  private val ProviderKey = "spark.sql.streaming.stateStore.providerClass"
 
   /** Three event slices staged as one parquet file each; returns the dir. */
   private def stage(s: SparkSession, id: String): String = {
@@ -50,7 +52,8 @@ class StreamCheckpointSpec extends SparkTestBase {
   }
 
   private def runCounts(s: SparkSession, src: String, ckpt: String, name: String): DataFrame = {
-    StreamOps.withStreamingConf(s)(counts(source(s, src)).writeStream.format("memory")
+    val q = counts(source(s, src))
+    StreamOps.withStreamingConf(q)(q.writeStream.format("memory")
       .queryName(name).outputMode(OutputMode.Complete())
       .option("checkpointLocation", ckpt).trigger(Trigger.AvailableNow()).start()
       .awaitTermination())
@@ -118,11 +121,43 @@ class StreamCheckpointSpec extends SparkTestBase {
 
     val own = "org.apache.spark.sql.execution.streaming.checkpointing.FileContextBasedCheckpointFileManager"
     s.conf.set(ManagerKey, own)
-    val seen = intercept[IllegalStateException](StreamOps.withStreamingConf(s) {
+    val seen = intercept[IllegalStateException](StreamOps.withStreamingConf(counts(source(s, src))) {
       throw new IllegalStateException(s.conf.get(ManagerKey) + " " + s.conf.get("spark.sql.shuffle.partitions"))
     }).getMessage
     assert(seen.endsWith("FileSystemBasedCheckpointFileManager " + sys.props.getOrElse("graft.stream.parts", "4")))
     assert(s.conf.get(ManagerKey) == own)
     assert(s.conf.get("spark.sql.shuffle.partitions") == "7")
+  }
+
+  test("withConf restores a set and an unset value when the body throws") {
+    val s = spark.newSession()
+    s.conf.set("spark.sql.shuffle.partitions", "7")
+    assert(!s.conf.getAll.contains(ProviderKey))
+    val before = s.conf.getAll
+    val rocks = "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+    val seen = intercept[IllegalStateException](
+      StreamOps.withConf(s, "spark.sql.shuffle.partitions" -> "3", ProviderKey -> rocks) {
+        throw new IllegalStateException(s.conf.get("spark.sql.shuffle.partitions") + " " + s.conf.get(ProviderKey))
+      }).getMessage
+    assert(seen == s"3 $rocks")
+    assert(s.conf.get("spark.sql.shuffle.partitions") == "7")
+    assert(!s.conf.getAll.contains(ProviderKey), "an unset conf came back set (to its default)")
+    assert(s.conf.getAll == before)
+  }
+
+  test("a transformWithState runToMemory runs on RocksDB and leaves the provider as it was") {
+    val s = spark.newSession()
+    val src = stage(s, "ckpt_spec_tws")
+    val events = Tables.load(s, sfDir, "events").count()
+    def tws(): Long =
+      StreamOps.runToMemory(s, StreamOps.twsKeyedProcess(s, source(s, src)), OutputMode.Append()).count()
+    assert(!s.conf.getAll.contains(ProviderKey))
+    assert(tws() == events) // one output row per event
+    assert(!s.conf.getAll.contains(ProviderKey), "the TWS run left the provider set on the session")
+    // an explicit session choice is overridden for the TWS query only
+    val hdfs = "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider"
+    s.conf.set(ProviderKey, hdfs)
+    assert(tws() == events)
+    assert(s.conf.get(ProviderKey) == hdfs)
   }
 }

@@ -69,19 +69,19 @@ class StreamingSpec extends SparkTestBase {
     import s.implicits._
     implicit val sc = s.sqlContext
     val in = MemoryStream[Raw]
-    val q = StreamOps.twsKeyedProcess(s, toEvents(in.toDF()))
-      .writeStream.format("memory").queryName("tws_t").outputMode("append").start()
-    in.addData(Raw(1, 1, "click", 10, 1.0), Raw(1, 2, "view", 20, 2.0))
-    q.processAllAvailable()
-    // batch 2: the running count, the last-3 ring and the per-type map all
-    // continue from batch-1 state
-    in.addData(Raw(1, 3, "click", 30, 3.0), Raw(1, 4, "click", 40, 4.0))
-    q.processAllAvailable()
-    val rows = s.table("tws_t").as[(Long, Long, Long, Long, Long)].collect().toSet
-    q.stop()
-    // twsKeyedProcess switched the shared session to RocksDB — restore the
-    // default provider for the rest of the suite
-    s.conf.unset("spark.sql.streaming.stateStore.providerClass")
+    val tws = StreamOps.twsKeyedProcess(s, toEvents(in.toDF()))
+    val rows = StreamOps.withStreamingConf(tws) {
+      val q = tws.writeStream.format("memory").queryName("tws_t").outputMode("append").start()
+      try {
+        in.addData(Raw(1, 1, "click", 10, 1.0), Raw(1, 2, "view", 20, 2.0))
+        q.processAllAvailable()
+        // batch 2: the running count, the last-3 ring and the per-type map
+        // all continue from batch-1 state
+        in.addData(Raw(1, 3, "click", 30, 3.0), Raw(1, 4, "click", 40, 4.0))
+        q.processAllAvailable()
+        s.table("tws_t").as[(Long, Long, Long, Long, Long)].collect().toSet
+      } finally q.stop()
+    }
     assert(rows == Set(
       (1L, 1L, 1L, 100L, 1L),        // first click: ring=[100]
       (1L, 2L, 2L, 300L, 1L),        // first view: ring=[200,100]
@@ -114,21 +114,20 @@ class StreamingSpec extends SparkTestBase {
       // shouldRunAnotherBatch, so AvailableNow / processAllAvailable would
       // never terminate (same trap as procTimeDebounce)
       val stream = s.readStream.schema("user_id LONG, event_id LONG").parquet(src)
-      val q = StreamOps.twsTtlCounter(s, stream, ttlMs = 1000)
-        .writeStream.outputMode("append")
+      val tws = StreamOps.twsTtlCounter(s, stream, ttlMs = 1000)
+      StreamOps.withStreamingConf(tws)(tws.writeStream.outputMode("append")
         .foreachBatch { (df: org.apache.spark.sql.DataFrame, _: Long) =>
           df.write.mode("append").parquet(out)
         }
         .option("checkpointLocation", ckpt)
         .trigger(Trigger.Once()).start()
-      q.awaitTermination()
+        .awaitTermination())
     }
     addFile("f0", Seq((1L, 1L), (1L, 2L)))
     run() // counter reaches 2; TTL clock starts at the batch's write
     Thread.sleep(3000) // let the 1s TTL lapse while stopped (wide margin)
     addFile("f1", Seq((1L, 3L)))
     run() // restart: the stored counter has expired — restarts at 1
-    s.conf.unset("spark.sql.streaming.stateStore.providerClass")
     val rows = s.read.parquet(out).as[(Long, Long, Long)].collect().toSet
     assert(rows == Set((1L, 1L, 1L), (1L, 2L, 2L), (1L, 3L, 1L)))
   }
@@ -138,22 +137,24 @@ class StreamingSpec extends SparkTestBase {
     import s.implicits._
     implicit val sc = s.sqlContext
     val in = MemoryStream[Raw]
-    val q = StreamOps.twsInactivityAlert(s, toEvents(in.toDF()), gapMs = 30000)
-      .writeStream.format("memory").queryName("twstimer_t").outputMode("append").start()
-    // two events for key 1: the second DELETES the 10s+30s timer and
-    // re-registers at 20s+30s (the Flink supersede idiom)
-    in.addData(Raw(1, 1, "click", 10, 0.0), Raw(1, 2, "click", 20, 0.0))
-    q.processAllAvailable()
-    // key 2 at 100s pushes the watermark past key 1's 50s deadline → onTimer
-    in.addData(Raw(2, 3, "click", 100, 0.0))
-    q.processAllAvailable()
-    assert(s.table("twstimer_t").as[(Long, Long)].collect().toSet == Set((1L, 50000L)))
-    // key 2's own 130s deadline fires once the watermark passes it
-    in.addData(Raw(3, 4, "click", 200, 0.0))
-    q.processAllAvailable()
-    val rows = s.table("twstimer_t").as[(Long, Long)].collect().toSet
-    q.stop()
-    s.conf.unset("spark.sql.streaming.stateStore.providerClass")
+    val tws = StreamOps.twsInactivityAlert(s, toEvents(in.toDF()), gapMs = 30000)
+    val rows = StreamOps.withStreamingConf(tws) {
+      val q = tws.writeStream.format("memory").queryName("twstimer_t").outputMode("append").start()
+      try {
+        // two events for key 1: the second DELETES the 10s+30s timer and
+        // re-registers at 20s+30s (the Flink supersede idiom)
+        in.addData(Raw(1, 1, "click", 10, 0.0), Raw(1, 2, "click", 20, 0.0))
+        q.processAllAvailable()
+        // key 2 at 100s pushes the watermark past key 1's 50s deadline → onTimer
+        in.addData(Raw(2, 3, "click", 100, 0.0))
+        q.processAllAvailable()
+        assert(s.table("twstimer_t").as[(Long, Long)].collect().toSet == Set((1L, 50000L)))
+        // key 2's own 130s deadline fires once the watermark passes it
+        in.addData(Raw(3, 4, "click", 200, 0.0))
+        q.processAllAvailable()
+        s.table("twstimer_t").as[(Long, Long)].collect().toSet
+      } finally q.stop()
+    }
     assert(rows == Set((1L, 50000L), (2L, 130000L)))
   }
 
