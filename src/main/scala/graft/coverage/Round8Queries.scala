@@ -16,19 +16,6 @@ object Round8Queries {
 
   private val seq = new java.util.concurrent.atomic.AtomicLong(0)
 
-  /** Write `df` as one parquet file named `name` inside `srcDir` (the
-    * incremental sibling of [[StreamOps.stageBatches]], which wipes its
-    * dir — recovery runs must ADD files between restarts). */
-  private def addBatch(base: String, srcDir: String, name: String, df: DataFrame): Unit = {
-    val tmp = java.nio.file.Paths.get(s"$base/stage_$name")
-    // single-file: the named one-file-per-batch contract (see scaladoc)
-    df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-    val ls = java.nio.file.Files.list(tmp)
-    val part = try ls.filter(_.toString.endsWith(".parquet")).findFirst().get finally ls.close()
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(srcDir))
-    java.nio.file.Files.copy(part, java.nio.file.Paths.get(s"$srcDir/$name.parquet"))
-  }
-
   /** Checkpoint recovery, oracle-gated — ref CheckpointCoordinator.java:94
     * (the exactly-once contract: a restarted job resumes from the last
     * completed checkpoint's offsets AND operator state). Spark spelling:
@@ -52,8 +39,8 @@ object Round8Queries {
       val base = s"${StreamOps.scratchRoot}/recovery_${san(dir)}_${seq.incrementAndGet()}"
       StreamOps.wipeDir(base)
       val (src, ckpt) = (s"$base/src", s"$base/ckpt")
-      addBatch(base, src, "b0", orders.filter(col("k") % 3 === 0))
-      addBatch(base, src, "b1", orders.filter(col("k") % 3 === 1))
+      StreamOps.stageBatch(base, src, "b0", orders.filter(col("k") % 3 === 0))
+      StreamOps.stageBatch(base, src, "b1", orders.filter(col("k") % 3 === 1))
       val schema = orders.schema
       def runOnce(tbl: String): (DataFrame, Long) = {
         val agg = s.readStream.schema(schema)
@@ -76,7 +63,7 @@ object Round8Queries {
       val seen1 = partial.agg(sum(col("n"))).collect()(0).getLong(0)
       require(seen1 == total - b2Rows,
         s"pre-kill run must cover exactly b0+b1 ($seen1 vs ${total - b2Rows})")
-      addBatch(base, src, "b2", orders.filter(col("k") % 3 === 2))
+      StreamOps.stageBatch(base, src, "b2", orders.filter(col("k") % 3 === 2))
       val (fin, read2) = runOnce(s"rec_b_$n") // restart from the checkpoint
       require(read2 == b2Rows,
         s"restart must read ONLY the new batch from restored offsets ($read2 vs $b2Rows)")
@@ -121,8 +108,8 @@ object Round8Queries {
       val a1 = rows("A", "m")                        // minutes 0-59
       val b1 = rows("B", "m % 30")                   // minutes 0-29
       val a2 = rows("A", "60 + m")                   // minutes 60-119
-      addBatch(base, srcA, "b0", a1)
-      addBatch(base, srcB, "b0", b1)
+      StreamOps.stageBatch(base, srcA, "b0", a1)
+      StreamOps.stageBatch(base, srcB, "b0", b1)
       val schema = a1.schema
       // parquet sink, not memory: the file sink's commit log is what makes
       // the run-2 restart from the same checkpoint legal (memory sink
@@ -154,7 +141,7 @@ object Round8Queries {
           scala.jdk.CollectionConverters.SeqHasAsJava(rows1).asJava),
         s.read.parquet(out).schema).withColumn("fired_run", lit(1L))
       // B goes IDLE: only A receives run-2 data
-      addBatch(base, srcA, "b1", a2)
+      StreamOps.stageBatch(base, srcA, "b1", a2)
       val fired2 = fire().exceptAll(fired1.drop("fired_run"))
         .withColumn("fired_run", lit(2L))
       require(fired2.filter(col("src") === "A").count() > 0,
@@ -317,8 +304,8 @@ object Round8Queries {
       val base = s"${StreamOps.scratchRoot}/savepoint_${san(dir)}_${seq.incrementAndGet()}"
       StreamOps.wipeDir(base)
       val (src, ckptA, ckptB) = (s"$base/src", s"$base/ckptA", s"$base/ckptB")
-      addBatch(base, src, "b0", orders.filter(col("k") % 4 === 0))
-      addBatch(base, src, "b1", orders.filter(col("k") % 4 === 1))
+      StreamOps.stageBatch(base, src, "b0", orders.filter(col("k") % 4 === 0))
+      StreamOps.stageBatch(base, src, "b1", orders.filter(col("k") % 4 === 1))
       val schema = orders.schema
       def runOnce(ckpt: String, tbl: String): (DataFrame, Long) = {
         val agg = s.readStream.schema(schema)
@@ -352,10 +339,10 @@ object Round8Queries {
       val rows = (b: Int) => orders.filter(col("k") % 4 === b).count()
       runOnce(ckptA, s"svp_base_$n") // quarters 0+1, then STOP (quiesce)
       copyDir(ckptA, ckptB)          // THE SAVEPOINT
-      addBatch(base, src, "b2", orders.filter(col("k") % 4 === 2))
+      StreamOps.stageBatch(base, src, "b2", orders.filter(col("k") % 4 === 2))
       val (mainFin, readMain) = runOnce(ckptA, s"svp_main_$n")
       require(readMain == rows(2), s"main resume must read only b2 ($readMain)")
-      addBatch(base, src, "b3", orders.filter(col("k") % 4 === 3))
+      StreamOps.stageBatch(base, src, "b3", orders.filter(col("k") % 4 === 3))
       val (forkFin, readFork) = runOnce(ckptB, s"svp_fork_$n")
       require(readFork == rows(2) + rows(3),
         s"fork from the savepoint must read b2+b3 ($readFork)")

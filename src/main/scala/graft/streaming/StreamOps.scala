@@ -3,7 +3,6 @@ package graft.streaming
 import graft.operators.Cep
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.TransformWithState
-import org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
 
@@ -24,10 +23,11 @@ object StreamOps {
   /** Scratch root for harness artifacts (staged batches, checkpoints,
     * symlink dirs). Every micro-batch writes a few small checkpoint files
     * (offset, commit and source logs, one state-store delta per shuffle
-    * partition). Their measured cost was Hadoop's per-file subprocesses,
-    * which `withStreamingConf` removes, not the disk; tmpfs still keeps
-    * them off the disk, so prefer /dev/shm when present (production would
-    * point this at fast local SSD via spark.local.dir). */
+    * partition). Their measured cost was Hadoop's per-file `readlink` and
+    * `chmod` subprocesses, which `withStreamingConf`'s checkpoint manager
+    * removes, not the disk; tmpfs still keeps them off the disk, so prefer
+    * /dev/shm when present (production would point this at fast local SSD
+    * via spark.local.dir). */
   val scratchRoot: String =
     if (new java.io.File("/dev/shm").isDirectory) "/dev/shm/graft" else "/tmp/graft"
 
@@ -50,27 +50,32 @@ object StreamOps {
     linkDir.toString
   }
 
+  /** Write `df` as the one parquet file `srcDir/name.parquet`, staged
+    * through `base/stage_name`; the other files of `srcDir` stay, so a
+    * restarted query's source can gain a batch. Returns the written file. */
+  def stageBatch(base: String, srcDir: String, name: String, df: DataFrame): java.nio.file.Path = {
+    val tmp = java.nio.file.Paths.get(base, s"stage_$name")
+    // single-file: each staged batch must be exactly ONE part-file (the
+    // file-stream trigger-batch contract); batches are bounded slices,
+    // never an sf-scaled table
+    df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
+    val ls = java.nio.file.Files.list(tmp)
+    val part = try ls.filter(_.toString.endsWith(".parquet")).findFirst().get finally ls.close()
+    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(srcDir))
+    java.nio.file.Files.copy(part, java.nio.file.Paths.get(srcDir, s"$name.parquet"))
+  }
+
   /** Stage DataFrames as single parquet files with ordered mtimes in a
     * fresh dir, so a file stream with maxFilesPerTrigger=1 replays them as
     * deterministic micro-batches (oldest first). Returns the source dir. */
   def stageBatches(s: SparkSession, id: String, batches: Seq[DataFrame]): String = {
-    val base = java.nio.file.Paths.get(s"$scratchRoot/batches/$id")
-    wipe(base.toString)
-    val srcDir = base.resolve("src")
-    java.nio.file.Files.createDirectories(srcDir)
+    val base = s"$scratchRoot/batches/$id"
+    wipe(base)
+    val srcDir = s"$base/src"
     batches.zipWithIndex.foreach { case (df, i) =>
-      val tmp = base.resolve(s"stage_$i")
-      // single-file: each staged batch must be exactly ONE part-file with
-      // a controlled mtime (the file-stream trigger-batch contract);
-      // batches are bounded slices, never an sf-scaled table
-      df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-      val ls = java.nio.file.Files.list(tmp)
-      val part = try ls.filter(_.toString.endsWith(".parquet")).findFirst().get finally ls.close()
-      val dst = srcDir.resolve(s"b$i.parquet")
-      java.nio.file.Files.copy(part, dst)
-      dst.toFile.setLastModified(1000000L * (i + 1))
+      stageBatch(base, srcDir, s"b$i", df).toFile.setLastModified(1000000L * (i + 1))
     }
-    srcDir.toString
+    srcDir
   }
 
   /** Replay `batches` as a file stream, one micro-batch each, in order:
@@ -152,13 +157,16 @@ object StreamOps {
     *    delta file every micro-batch, so the per-batch checkpoint cost
     *    grows with the partition count; the fixture volume stays far below
     *    per-partition limits at 4.
-    *  - Spark's FileSystem-based checkpoint manager instead of the
-    *    FileContext one. Without libhadoop, a FileContext rename of a local
-    *    checkpoint file forks `readlink` 8 times; the FileSystem manager
-    *    renames with a plain `File.renameTo`. Writes still go through the
-    *    checksummed LocalFileSystem, so Hadoop `.crc` files and Spark's
-    *    checkpoint-file checksums stay. The engine's checkpoints are all
-    *    local (under `scratchRoot` or the JVM temp dir).
+    *  - [[NioCheckpointFileManager]] instead of Spark's FileContext
+    *    manager. Without libhadoop, a FileContext rename of a local
+    *    checkpoint file forks `readlink` 8 times, and every local file
+    *    Hadoop creates forks `chmod` for itself and for its `.crc`. This
+    *    manager is Spark's FileSystem manager (a plain `File.renameTo`)
+    *    with the permission bits set in process. Writes still go through
+    *    the checksummed LocalFileSystem, so Hadoop `.crc` files, Spark's
+    *    checkpoint-file checksums and the file modes stay. The engine's
+    *    checkpoints are all local (under `scratchRoot` or the JVM temp
+    *    dir).
     *  - The RocksDB state-store provider when `df`'s plan has a
     *    `transformWithState` node (Flink's keyed-state surface, which
     *    Spark runs only on RocksDB); every other query keeps the session's
@@ -166,8 +174,7 @@ object StreamOps {
   def withStreamingConf[T](df: DataFrame)(body: => T): T = {
     val settings = Seq(
       "spark.sql.shuffle.partitions" -> sys.props.getOrElse("graft.stream.parts", "4"),
-      "spark.sql.streaming.checkpointFileManagerClass" ->
-        classOf[FileSystemBasedCheckpointFileManager].getName)
+      "spark.sql.streaming.checkpointFileManagerClass" -> classOf[NioCheckpointFileManager].getName)
     val tws = df.queryExecution.logical.exists(_.isInstanceOf[TransformWithState])
     val provider = Option.when(tws)("spark.sql.streaming.stateStore.providerClass" ->
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")

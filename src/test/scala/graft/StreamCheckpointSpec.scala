@@ -1,7 +1,10 @@
 package graft
 
-import graft.streaming.StreamOps
-import java.nio.file.{Files, Paths, StandardCopyOption}
+import graft.streaming.{NioCheckpointFileManager, NioPermissionFileSystem, StreamOps}
+import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.attribute.PosixFilePermissions
+import org.apache.hadoop.fs.{FileSystem, Path => HPath}
+import org.apache.hadoop.fs.permission.FsPermission
 import jdk.jfr.Recording
 import jdk.jfr.consumer.RecordingFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -9,11 +12,12 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{OutputMode, Trigger}
 import scala.jdk.CollectionConverters._
 
-/** Engine streaming queries write their checkpoints through Spark's
-  * FileSystem checkpoint manager (`StreamOps.withStreamingConf`): no
-  * Hadoop `readlink` subprocess per checkpoint file, recovery and both
-  * checksum sidecars intact, a transformWithState query on RocksDB, and
-  * the session's settings restored (`StreamOps.withConf`). */
+/** Engine streaming queries write their checkpoints through
+  * [[NioCheckpointFileManager]] (`StreamOps.withStreamingConf`): no Hadoop
+  * `readlink` or `chmod` subprocess per checkpoint file, recovery, both
+  * checksum sidecars and the default file modes intact, a
+  * transformWithState query on RocksDB, and the session's settings
+  * restored (`StreamOps.withConf`). */
 class StreamCheckpointSpec extends SparkTestBase {
 
   private val ManagerKey = "spark.sql.streaming.checkpointFileManagerClass"
@@ -24,6 +28,10 @@ class StreamCheckpointSpec extends SparkTestBase {
     val ev = Tables.load(s, sfDir, "events")
     StreamOps.stageBatches(s, id, (0 until 3).map(i => ev.filter(col("event_id") % 3 === i)))
   }
+
+  /** Copy staged slice `i` of `full` into the source dir `src`. */
+  private def add(full: String, src: Path, i: Int): Unit =
+    Files.copy(Paths.get(full, s"b$i.parquet"), src.resolve(s"b$i.parquet"), StandardCopyOption.COPY_ATTRIBUTES)
 
   private def source(s: SparkSession, dir: String): DataFrame =
     s.readStream.schema(Tables.load(s, sfDir, "events").schema)
@@ -60,22 +68,33 @@ class StreamCheckpointSpec extends SparkTestBase {
     s.table(name)
   }
 
-  test("a 3-slice stateful runToMemory forks no readlink on its checkpoint dir") {
+  test("a stateful runToMemory forks no chmod or readlink on its checkpoint dir") {
     val s = spark.newSession()
     val src = stage(s, "ckpt_spec_forks")
-    val (result, cmds) = forks(
-      sorted(StreamOps.runToMemory(s, counts(source(s, src)), OutputMode.Complete())))
+    val control = Paths.get(s"${StreamOps.scratchRoot}/ckpt_spec_forks_control")
+    StreamOps.wipeDir(control.toString)
+    val (result, cmds) = try forks {
+      val rows = sorted(StreamOps.runToMemory(s, counts(source(s, src)), OutputMode.Complete()))
+      // positive control: a file created through the default local file
+      // system in the same recording
+      FileSystem.getLocal(s.sparkContext.hadoopConfiguration)
+        .create(new HPath(control.resolve("f").toString)).close()
+      rows
+    } finally StreamOps.wipeDir(control.toString)
     assert(result == sorted(counts(Tables.load(s, sfDir, "events"))))
     // runToMemory checkpoints under this JVM's own dir, and this run is the
     // only streaming query of the recording
     val ckpt = s"${StreamOps.scratchRoot}/ckpt/${ProcessHandle.current().pid()}/"
     val mine = cmds.filter(_.contains(ckpt))
-    val readlinks = mine.filter(_.startsWith("readlink"))
-    assert(readlinks.size == 0, s"readlink forks, e.g. ${readlinks.take(2)}")
-    // the recording does see this run's forks: without libhadoop,
-    // RawLocalFileSystem.setPermission still runs chmod per checkpoint file
+    Seq("chmod", "readlink").foreach { tool =>
+      val seen = mine.filter(_.startsWith(tool))
+      assert(seen.isEmpty, s"${seen.size} $tool forks, e.g. ${seen.take(2)}")
+    }
+    // the recording does see forks: without libhadoop, the default
+    // RawLocalFileSystem.setPermission runs chmod per file it creates
     if (!org.apache.hadoop.util.NativeCodeLoader.isNativeCodeLoaded)
-      assert(mine.exists(_.startsWith("chmod")), s"no fork recorded for $ckpt")
+      assert(cmds.exists(c => c.startsWith("chmod") && c.contains(control.toString)),
+        s"no chmod fork recorded for $control")
   }
 
   test("a restart from a checkpoint written under the helper equals a one-shot run") {
@@ -85,13 +104,11 @@ class StreamCheckpointSpec extends SparkTestBase {
     StreamOps.wipeDir(base.toString)
     val (src, ckpt) = (base.resolve("src"), base.resolve("ckpt").toString)
     Files.createDirectories(src)
-    def add(i: Int): Unit = Files.copy(Paths.get(full, s"b$i.parquet"), src.resolve(s"b$i.parquet"),
-      StandardCopyOption.COPY_ATTRIBUTES)
     try {
-      add(0); add(1)
+      add(full, src, 0); add(full, src, 1)
       val first = runCounts(s, src.toString, ckpt, "ckpt_spec_first")
       assert(first.agg(sum(col("n"))).head().getLong(0) < Tables.load(s, sfDir, "events").count())
-      add(2)
+      add(full, src, 2)
       val restarted = runCounts(s, src.toString, ckpt, "ckpt_spec_restarted")
       val oneShot = StreamOps.runToMemory(s, counts(source(s, full)), OutputMode.Complete())
       assert(sorted(restarted) == sorted(oneShot))
@@ -110,6 +127,73 @@ class StreamCheckpointSpec extends SparkTestBase {
     } finally StreamOps.wipeDir(base.toString)
   }
 
+  test("a restarted query's checkpoint files keep their checksums and the default file modes") {
+    val s = spark.newSession()
+    // a Hadoop umask unlike the usual process umask (022): a mode that
+    // Hadoop asked for and that was not set would show
+    s.conf.set("fs.permissions.umask-mode", "027")
+    val full = stage(s, "ckpt_spec_files")
+    val base = Paths.get(s"${StreamOps.scratchRoot}/ckpt_spec_files")
+    StreamOps.wipeDir(base.toString)
+    val (src, ckpt) = (base.resolve("src"), base.resolve("ckpt"))
+    Files.createDirectories(src)
+    try {
+      add(full, src, 0); add(full, src, 1)
+      runCounts(s, src.toString, ckpt.toString, "ckpt_spec_files_first")
+      add(full, src, 2)
+      runCounts(s, src.toString, ckpt.toString, "ckpt_spec_files_restarted")
+
+      // the modes a file and a dir get from the default LocalFileSystem in
+      // this JVM under the query's Hadoop conf
+      val local = FileSystem.newInstance(java.net.URI.create("file:///"), s.sessionState.newHadoopConf())
+      val (refFile, refDir) = (base.resolve("ref_file"), base.resolve("ref_dir"))
+      try {
+        local.create(new HPath(refFile.toString)).close()
+        local.mkdirs(new HPath(refDir.toString))
+      } finally local.close()
+      val (fileMode, dirMode) = (Files.getPosixFilePermissions(refFile), Files.getPosixFilePermissions(refDir))
+      assert(PosixFilePermissions.toString(fileMode) == "rw-r-----")
+      assert(PosixFilePermissions.toString(dirMode) == "rwxr-x---")
+
+      def names(dir: Path): Set[String] = {
+        val ls = Files.list(dir)
+        try ls.iterator().asScala.map(_.getFileName.toString).toSet finally ls.close()
+      }
+      // offset, commit and source logs hold one file per batch (0, 1, 2);
+      // each state delta file also has Spark's checksum file
+      val logs = Seq("offsets", "commits", "sources/0").map(l => ckpt.resolve(l) -> "\\d+")
+      val state = ckpt.resolve("state/0/0") -> "\\d+\\.delta"
+      (logs :+ state).foreach { case (dir, pattern) =>
+        val all = names(dir)
+        val files = all.filter(_.matches(pattern))
+        assert(files.size == 3, s"one file per micro-batch in $dir, got ${all.toSeq.sorted}")
+        assert(Files.getPosixFilePermissions(dir) == dirMode, s"mode of $dir")
+        val sidecars = files.map(f => s".$f.crc") ++
+          (if (dir == state._1) files.map(f => s"$f.crc") else Set.empty)
+        (files ++ sidecars).foreach { f =>
+          assert(all(f), s"no $f in $dir: ${all.toSeq.sorted}")
+          assert(Files.getPosixFilePermissions(dir.resolve(f)) == fileMode, s"mode of $dir/$f")
+        }
+      }
+    } finally StreamOps.wipeDir(base.toString)
+  }
+
+  test("the in-process setPermission throws on the sticky bit instead of dropping it") {
+    val dir = Paths.get(s"${StreamOps.scratchRoot}/ckpt_spec_sticky")
+    StreamOps.wipeDir(dir.toString)
+    Files.createDirectories(dir)
+    try {
+      val fs = new NioPermissionFileSystem
+      fs.initialize(java.net.URI.create("file:///"), spark.sparkContext.hadoopConfiguration)
+      val p = new HPath(dir.toString)
+      fs.setPermission(p, new FsPermission("750"))
+      assert(PosixFilePermissions.toString(Files.getPosixFilePermissions(dir)) == "rwxr-x---")
+      val e = intercept[java.io.IOException](fs.setPermission(p, new FsPermission("1777")))
+      assert(e.getMessage.contains(dir.toString))
+      assert(PosixFilePermissions.toString(Files.getPosixFilePermissions(dir)) == "rwxr-x---")
+    } finally StreamOps.wipeDir(dir.toString)
+  }
+
   test("the session's checkpoint manager and shuffle partitions are restored") {
     val s = spark.newSession()
     val src = stage(s, "ckpt_spec_conf")
@@ -124,7 +208,8 @@ class StreamCheckpointSpec extends SparkTestBase {
     val seen = intercept[IllegalStateException](StreamOps.withStreamingConf(counts(source(s, src))) {
       throw new IllegalStateException(s.conf.get(ManagerKey) + " " + s.conf.get("spark.sql.shuffle.partitions"))
     }).getMessage
-    assert(seen.endsWith("FileSystemBasedCheckpointFileManager " + sys.props.getOrElse("graft.stream.parts", "4")))
+    assert(seen.endsWith(classOf[NioCheckpointFileManager].getName + " " +
+      sys.props.getOrElse("graft.stream.parts", "4")))
     assert(s.conf.get(ManagerKey) == own)
     assert(s.conf.get("spark.sql.shuffle.partitions") == "7")
   }

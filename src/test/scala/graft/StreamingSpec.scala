@@ -92,22 +92,11 @@ class StreamingSpec extends SparkTestBase {
   test("transformWithState TTL: an untouched ValueState expires (StateTtlConfig analog)") {
     val s = spark
     import s.implicits._
-    import scala.jdk.CollectionConverters._
     val base = s"${StreamOps.scratchRoot}/twsttl"
-    val p = java.nio.file.Paths.get(base)
-    if (java.nio.file.Files.exists(p)) {
-      java.nio.file.Files.walk(p).sorted(java.util.Comparator.reverseOrder())
-        .iterator().asScala.foreach(x => java.nio.file.Files.deleteIfExists(x))
-    }
+    StreamOps.wipeDir(base)
     val (src, ckpt, out) = (s"$base/src", s"$base/ckpt", s"$base/out")
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(src))
-    def addFile(name: String, rows: Seq[(Long, Long)]): Unit = {
-      val tmp = s"$base/stage_$name"
-      rows.toDF("user_id", "event_id").coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = java.nio.file.Files.list(java.nio.file.Paths.get(tmp))
-        .filter(_.toString.endsWith(".parquet")).findFirst().get
-      java.nio.file.Files.copy(part, java.nio.file.Paths.get(s"$src/$name.parquet"))
-    }
+    def addFile(name: String, rows: Seq[(Long, Long)]): Unit =
+      StreamOps.stageBatch(base, src, name, rows.toDF("user_id", "event_id"))
     @annotation.nowarn("cat=deprecation")
     def run(): Unit = {
       // Trigger.Once two-run harness: processing-time mode always reports
@@ -341,21 +330,10 @@ class StreamingSpec extends SparkTestBase {
     val s = spark
     import s.implicits._
     val base = "/tmp/graft_proctimer"
-    val p = java.nio.file.Paths.get(base)
-    if (java.nio.file.Files.exists(p)) {
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(p).sorted(java.util.Comparator.reverseOrder())
-        .iterator().asScala.foreach(x => java.nio.file.Files.deleteIfExists(x))
-    }
+    StreamOps.wipeDir(base)
     val (src, ckpt, out) = (s"$base/src", s"$base/ckpt", s"$base/out")
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(src))
-    def addFile(name: String, rows: Seq[(Long, Long)]): Unit = {
-      val tmp = s"$base/stage_$name"
-      rows.toDF("user_id", "event_id").coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = java.nio.file.Files.list(java.nio.file.Paths.get(tmp))
-        .filter(_.toString.endsWith(".parquet")).findFirst().get
-      java.nio.file.Files.copy(part, java.nio.file.Paths.get(s"$src/$name.parquet"))
-    }
+    def addFile(name: String, rows: Seq[(Long, Long)]): Unit =
+      StreamOps.stageBatch(base, src, name, rows.toDF("user_id", "event_id"))
     @annotation.nowarn("cat=deprecation")
     def run(): Unit = {
       val stream = s.readStream.schema("user_id LONG, event_id LONG").parquet(src)
@@ -910,21 +888,10 @@ class StreamingSpec extends SparkTestBase {
     val s = spark
     import s.implicits._
     val base = graft.streaming.StreamOps.scratchRoot + "/lsh_restart"
-    val p = java.nio.file.Paths.get(base)
-    if (java.nio.file.Files.exists(p)) {
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(p).sorted(java.util.Comparator.reverseOrder())
-        .iterator().asScala.foreach(x => java.nio.file.Files.deleteIfExists(x))
-    }
+    StreamOps.wipeDir(base)
     val (src, ckpt, out) = (s"$base/src", s"$base/ckpt", s"$base/out")
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(src))
-    def addFile(name: String, rows: Seq[(Long, Int, String)]): Unit = {
-      val tmp = s"$base/stage_$name"
-      rows.toDF("doc_id", "band", "bkey").coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = java.nio.file.Files.list(java.nio.file.Paths.get(tmp))
-        .filter(_.toString.endsWith(".parquet")).findFirst().get
-      java.nio.file.Files.copy(part, java.nio.file.Paths.get(s"$src/$name.parquet"))
-    }
+    def addFile(name: String, rows: Seq[(Long, Int, String)]): Unit =
+      StreamOps.stageBatch(base, src, name, rows.toDF("doc_id", "band", "bkey"))
     def run(): Unit = {
       val stream = s.readStream.schema("doc_id LONG, band INT, bkey STRING").parquet(src)
       val q = graft.streaming.StreamOps.streamingLshDedup(s, stream)
