@@ -1,8 +1,8 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 import java.nio.file.{Files, Paths}
+import scala.util.control.NonFatal
 
 /** Plan-evidence dump: writes `explain("formatted")` of selected queries to
   * a markdown file, so scan pushdown (`PushedFilters`/`ReadSchema`),
@@ -28,27 +28,26 @@ object PlanDump {
     // drop out of the dump just because they got fast.
     val names = (headline ++ args.drop(2).toSeq).distinct
       .filter(SparkEntry.queries.contains)
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.local.dir", graft.streaming.StreamOps.scratchRoot + "/local")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = EngineSession(8, logLevel = "ERROR")
     val sb = new StringBuilder
     sb.append(s"# Physical plans (`explain formatted`) — $sfDir\n\n")
     sb.append("Generated by `graft.PlanDump`; regenerate after plan-affecting changes.\n")
+    // a query that fails to plan fails the dump: its plan went unreviewed
+    var failed = 0
     names.foreach { name =>
-      SparkEntry.queries.get(name).foreach { fn =>
-        val plan =
-          try fn(spark, sfDir).queryExecution.explainString(ExplainMode.fromString("formatted"))
-          catch { case e: Throwable => s"(failed to plan: ${e.getMessage})" }
-        sb.append(s"\n## $name\n\n```\n$plan\n```\n")
-      }
+      val plan =
+        try SparkEntry.queries(name)(spark, sfDir).queryExecution
+          .explainString(ExplainMode.fromString("formatted"))
+        catch { case NonFatal(e) =>
+          failed += 1
+          System.err.println(s"[plandump] $name failed to plan: $e")
+          s"(failed to plan: ${e.getMessage})"
+        }
+      sb.append(s"\n## $name\n\n```\n$plan\n```\n")
     }
     Files.writeString(Paths.get(out), sb.toString)
     println(s"wrote ${names.size} plans to $out")
     spark.stop()
+    if (failed > 0) sys.exit(1)
   }
 }

@@ -20,8 +20,8 @@ object Tables {
   def load(spark: SparkSession, dir: String, name: String): DataFrame = {
     // events.ts is INT64 TIMESTAMP(MICROS) without TZ, which Spark reads as
     // TIMESTAMP_NTZ; relabel to the session-TZ TimestampType the query
-    // corpus expects (the session TZ is pinned to UTC in Verify/Bench/specs,
-    // so NTZ→TZ is a value-preserving relabel)
+    // corpus expects (EngineSession pins the session TZ to UTC for every
+    // main and spec, so NTZ→TZ is a value-preserving relabel)
     val df = spark.read.parquet(s"$dir/$name.parquet")
     if (name == "events" && df.schema("ts").dataType == TimestampNTZType)
       df.withColumn("ts", col("ts").cast(TimestampType))

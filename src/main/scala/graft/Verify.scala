@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import java.nio.file.{Files, Paths}
 import scala.util.control.NonFatal
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
@@ -23,23 +23,14 @@ object Verify {
 
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // fixture-scale loop-width override, same contract as Bench (the
-      // library default follows the ambient width — see GraphOps)
-      .config("graft.graph.loopShufflePartitions",
-        sys.env.getOrElse("SPARK_GRAFT_LOOP_PARTS", "4"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.local.dir", graft.streaming.StreamOps.scratchRoot + "/local")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // h1Blocked: rendered-multiset pin; tolBlocked (r13, q17/q39a/q39b):
+    // tolerance pin — check.py routes by tolerance_excluded.json below.
+    val excluded = coverage.TpcdsVerbatim2Queries.h1Blocked ++
+      coverage.TpcdsVerbatim2Queries.tolBlocked
+    // the driver never sets SPARK_GRAFT_ONLY, so its runs stay exhaustive
+    val only = EngineSession.only(SparkEntry.queries.keySet ++ excluded.keySet)
+    val spark = EngineSession(EngineSession.envCores(4), fixtureWidths = true)
     new java.io.File(outDir).mkdirs()
-    // optional comma-separated subset for fast local iteration (same contract
-    // as Bench); the driver never sets it, so its runs stay exhaustive
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").map(_.trim).toSet)
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }
       .foreach { case (name, fn) => dump(outDir, name)(fn(spark, sfDir)) }
@@ -69,10 +60,6 @@ object Verify {
     // the env var; tools/run_verify.sh always does.
     sys.env.get("SPARK_GRAFT_EXCLUDED_OUT").foreach { exDir =>
       new java.io.File(exDir).mkdirs()
-      // h1Blocked: rendered-multiset pin; tolBlocked (r13, q17/q39a/q39b):
-      // tolerance pin — check.py routes by tolerance_excluded.json below.
-      val excluded = coverage.TpcdsVerbatim2Queries.h1Blocked ++
-        coverage.TpcdsVerbatim2Queries.tolBlocked
       excluded.filter { case (name, _) => only.forall(_.contains(name)) }
         .foreach { case (name, qq) => dump(exDir, name)(qq.run(spark, sfDir)) }
       // the excluded json is filtered by SPARK_GRAFT_ONLY exactly like the

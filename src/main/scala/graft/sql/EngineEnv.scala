@@ -1179,7 +1179,7 @@ final class EngineEnv(val spark: SparkSession, val catalogDir: Option[String] = 
     // reference reuses identical-digest subplans at plan time
     // (SubplanReuser.scala:54); Spark's analog is AQE's runtime exchange
     // reuse — q14a's executed plan carries 37 ReusedExchange nodes
-    // (tools/PlanReuseProbe), so its triple-referenced cross_items CTE
+    // (OPTIMIZATION_r16.md), so its triple-referenced cross_items CTE
     // already computes its heavy shuffles once. A SQL-level
     // materialization pass (persist + temp view per multi-ref CTE) was
     // built and measured in round 13 and LOST at every scale — always-on:

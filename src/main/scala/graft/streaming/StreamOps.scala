@@ -152,7 +152,8 @@ object StreamOps {
     * the session settings an engine query uses, restored afterwards by
     * [[withConf]]. Every `DataStreamWriter.start()` of the engine runs
     * inside this helper.
-    *  - `spark.sql.shuffle.partitions` = `graft.stream.parts` (default 4).
+    *  - `spark.sql.shuffle.partitions` = the session's `graft.stream.parts`
+    *    (default 4; `EngineSession` sets it for the corpus runs).
     *    Each shuffle partition is one state-store instance that writes its
     *    delta file every micro-batch, so the per-batch checkpoint cost
     *    grows with the partition count; the fixture volume stays far below
@@ -173,7 +174,7 @@ object StreamOps {
     *    provider. The state backend is a per-query choice, as in Flink. */
   def withStreamingConf[T](df: DataFrame)(body: => T): T = {
     val settings = Seq(
-      "spark.sql.shuffle.partitions" -> sys.props.getOrElse("graft.stream.parts", "4"),
+      "spark.sql.shuffle.partitions" -> df.sparkSession.conf.get("graft.stream.parts", "4"),
       "spark.sql.streaming.checkpointFileManagerClass" -> classOf[NioCheckpointFileManager].getName)
     val tws = df.queryExecution.logical.exists(_.isInstanceOf[TransformWithState])
     val provider = Option.when(tws)("spark.sql.streaming.stateStore.providerClass" ->

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Adversarial-fixture generator (VERDICT r7 next-round item 6): writes a
@@ -39,14 +39,7 @@ object HostileGen {
   def main(args: Array[String]): Unit = {
     val src = args.headOption.getOrElse("/root/testdata/sf0.01")
     val out = if (args.length > 1) args(1) else "/dev/shm/graft/hostile0.01"
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.local.dir", graft.streaming.StreamOps.scratchRoot + "/local")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.EngineSession(graft.EngineSession.envCores(8))
 
     def t(n: String) = spark.read.parquet(s"$src/$n.parquet")
     // single FILE per table, exactly like the driver fixtures — DuckDB's

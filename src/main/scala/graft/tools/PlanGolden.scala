@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import java.nio.file.{Files, Paths}
 
 /** Golden-plan snapshot layer for the custom dialect-rewrite surfaces
@@ -70,14 +70,7 @@ object PlanGolden {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val dest = if (args.length > 1) args(1) else "src/test/resources/plan_golden"
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.local.dir", graft.streaming.StreamOps.scratchRoot + "/local")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.EngineSession(4, logLevel = "ERROR")
     Files.createDirectories(Paths.get(dest))
     targets.foreach { case (snap, qname) =>
       val df = graft.Queries.all(qname).run(spark, sfDir)

@@ -1,8 +1,7 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.plans.logical.{Window => LWindow}
-import scala.util.control.NonFatal
 
 /** Unpartitioned-window lint (VERDICT r14 #8).
   *
@@ -16,10 +15,8 @@ import scala.util.control.NonFatal
   * exempt as data, not engine design) or carry an entry in [[bounded]]
   * saying WHY its window input is cardinality-bounded.
   *
-  * Checked two ways from the same predicate: [[graft.AllQueriesSmokeSpec]]
-  * asserts it per query during the existing sf0.001 corpus pass (so `sbt
-  * test` fails on a new offender), and this main scans standalone for the
-  * round-leg ritual.
+  * [[graft.AllQueriesSmokeSpec]] asserts it per query during the sf0.001
+  * corpus pass, so `sbt test` fails on a new offender.
   */
 object WindowLint {
 
@@ -48,32 +45,4 @@ object WindowLint {
       case w: LWindow if w.partitionSpec.isEmpty =>
         w.windowExpressions.map(_.toString).mkString("; ").take(160)
     }
-
-  def main(args: Array[String]): Unit = {
-    val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.local.dir", graft.streaming.StreamOps.scratchRoot + "/local")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    var bad = 0
-    var failed = 0
-    graft.SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
-      // a query that cannot be linted fails the lint: its plan went unchecked
-      val wins = try unpartitionedWindows(fn(spark, sfDir))
-                 catch { case NonFatal(e) => failed += 1; println(s"ERR  $name: ${e.getMessage}"); Nil }
-      if (wins.nonEmpty) {
-        val tag =
-          if (isVerbatim(name)) "VERBATIM"
-          else if (bounded.contains(name)) "BOUNDED"
-          else { bad += 1; "OFFENDER" }
-        println(s"$tag $name: ${wins.mkString(" | ")}")
-      }
-    }
-    println(s"window lint: $bad offenders, $failed failed")
-    spark.stop()
-    if (bad > 0 || failed > 0) sys.exit(1)
-  }
 }

@@ -209,7 +209,7 @@ class StreamCheckpointSpec extends SparkTestBase {
       throw new IllegalStateException(s.conf.get(ManagerKey) + " " + s.conf.get("spark.sql.shuffle.partitions"))
     }).getMessage
     assert(seen.endsWith(classOf[NioCheckpointFileManager].getName + " " +
-      sys.props.getOrElse("graft.stream.parts", "4")))
+      s.conf.get("graft.stream.parts", "4")))
     assert(s.conf.get(ManagerKey) == own)
     assert(s.conf.get("spark.sql.shuffle.partitions") == "7")
   }

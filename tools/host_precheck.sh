@@ -14,20 +14,11 @@ set -eo pipefail
 cd /root/repo
 OUT=${1:-/dev/stdout}
 THRESH=${2:-1.3}
-ADD_OPENS=""
-for p in java.lang java.lang.invoke java.lang.reflect java.io java.net java.nio \
-         java.util java.util.concurrent java.util.concurrent.atomic; do
-  ADD_OPENS="$ADD_OPENS --add-opens java.base/$p=ALL-UNNAMED"
-done
-for p in sun.nio.ch sun.nio.cs sun.security.action sun.util.calendar; do
-  ADD_OPENS="$ADD_OPENS --add-opens java.base/$p=ALL-UNNAMED"
-done
 PROBES=()
 for i in 1 2 3; do
   LINE=$(SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 SPARK_GRAFT_CPUS=32 \
     SPARK_GRAFT_ONLY=q1_pricing_summary \
-    java $ADD_OPENS -Xmx8g -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC -Dspark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold=64MB \
-    -cp "target/scala-2.13/classes:/opt/spark/jars/*" graft.Bench 2>/dev/null \
+    tools/engine_java.sh 8g graft.Bench 2>/dev/null \
     | grep -v '"queries_n"' | grep -m1 '"metric":"total"')
   SEC=$(python3 -c "import json,sys; print(json.loads(sys.argv[1])['queries']['q1_pricing_summary'])" "$LINE")
   PROBES+=("$SEC")

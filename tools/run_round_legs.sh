@@ -43,16 +43,7 @@ leg cpus7  /root/testdata/sf0.01      7
 # generator carries the adversarial-streaming plants (hot key, duplicate
 # events, hash-ordered file) and a stale /dev/shm copy would silently
 # test yesterday's hostility instead of HEAD's.
-HG_OPENS=""
-for p in java.lang java.lang.invoke java.lang.reflect java.io java.net java.nio \
-         java.util java.util.concurrent java.util.concurrent.atomic; do
-  HG_OPENS="$HG_OPENS --add-opens java.base/$p=ALL-UNNAMED"
-done
-for p in sun.nio.ch sun.nio.cs sun.security.action sun.util.calendar; do
-  HG_OPENS="$HG_OPENS --add-opens java.base/$p=ALL-UNNAMED"
-done
-java $HG_OPENS -Xmx8g -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
-  -cp "target/scala-2.13/classes:/opt/spark/jars/*" graft.tools.HostileGen \
+tools/engine_java.sh 8g graft.tools.HostileGen \
   /root/testdata/sf0.01 /dev/shm/graft/hostile01 > "$LOG/hostilegen.log" 2>&1
 
 leg hostile /dev/shm/graft/hostile01  32
@@ -67,21 +58,12 @@ else
   touch "$LOG/PRECHECK_RED"
   echo "PRECHECK RED: $(cat "$LOG/precheck.json") — bench record will be host-degraded"
 fi
-ADD_OPENS=""
-for p in java.lang java.lang.invoke java.lang.reflect java.io java.net java.nio \
-         java.util java.util.concurrent java.util.concurrent.atomic; do
-  ADD_OPENS="$ADD_OPENS --add-opens java.base/$p=ALL-UNNAMED"
-done
-for p in sun.nio.ch sun.nio.cs sun.security.action sun.util.calendar; do
-  ADD_OPENS="$ADD_OPENS --add-opens java.base/$p=ALL-UNNAMED"
-done
 # Stage the bench stdout to a file, THEN grep: `java | grep -m1` under
 # pipefail would turn grep's early pipe close into a spurious SIGPIPE
 # failure, and java's own exit code would still be masked. This way set -e
 # checks java directly and the grep runs over the complete output.
 SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 SPARK_GRAFT_CPUS=32 \
-  java $ADD_OPENS -Xmx10g -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
-  -cp "target/scala-2.13/classes:/opt/spark/jars/*" graft.Bench \
+  tools/engine_java.sh 10g graft.Bench \
   > "$LOG/bench_raw.txt" 2> "$LOG/bench.err"
 grep -v '"queries_n"' "$LOG/bench_raw.txt" | grep -m1 '"metric":"total"' \
   > "$LOG/bench_local.json"
@@ -97,8 +79,7 @@ print("\n".join(sorted(n for n, sec in b["queries"].items() if sec > 2.5)))
 PYEOF
 # PlanDump unions these with its standing headline set internally.
 # shellcheck disable=SC2046
-java $ADD_OPENS -Xmx8g -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
-  -cp "target/scala-2.13/classes:/opt/spark/jars/*" graft.PlanDump \
+tools/engine_java.sh 8g graft.PlanDump \
   /root/testdata/sf0.01 "$LOG/PLANS.md" $(cat "$LOG/plan_names.txt") \
   2> "$LOG/plandump.err"
 

@@ -27,15 +27,6 @@ export SPARK_GRAFT_LOOP_PARTS=32
 # 4-partition runToMemory default is a fixture-scale optimization; one
 # state partition holding 100x the keys dominates q_stream_cdc_join)
 export SPARK_GRAFT_STREAM_PARTS=32
-ADD_OPENS=""
-for p in java.lang java.lang.invoke java.lang.reflect java.io java.net java.nio \
-         java.util java.util.concurrent java.util.concurrent.atomic; do
-  ADD_OPENS="$ADD_OPENS --add-opens java.base/$p=ALL-UNNAMED"
-done
-for p in sun.nio.ch sun.nio.cs sun.security.action sun.util.calendar; do
-  ADD_OPENS="$ADD_OPENS --add-opens java.base/$p=ALL-UNNAMED"
-done
-RUN="java $ADD_OPENS -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC -Dspark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold=64MB -cp target/scala-2.13/classes:/opt/spark/jars/*"
 # Host-stability gate (VERDICT r13 #1): refuse to record scale evidence in
 # a degraded window.
 tools/host_precheck.sh /tmp/sf10_precheck.json 1.3 || {
@@ -44,12 +35,12 @@ tools/host_precheck.sh /tmp/sf10_precheck.json 1.3 || {
 }
 echo "precheck: $(cat /tmp/sf10_precheck.json)" >&2
 if [ ! -d "$SF10/lineitem.parquet" ]; then
-  $RUN -Xmx24g graft.tools.ScaleGen /root/testdata/sf0.1 "$SF10" 100 1>&2
+  tools/engine_java.sh 24g graft.tools.ScaleGen /root/testdata/sf0.1 "$SF10" 100 1>&2
 fi
 SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 SPARK_GRAFT_CPUS=32 SPARK_GRAFT_ONLY="$QUERIES" \
-  $RUN -Xmx8g graft.Bench 2>/tmp/sf01_smoke100_gc.log | grep -v '"queries_n"' | grep -m1 '"metric":"total"' > /tmp/sf01_smoke100.json
+  tools/engine_java.sh 8g graft.Bench 2>/tmp/sf01_smoke100_gc.log | grep -v '"queries_n"' | grep -m1 '"metric":"total"' > /tmp/sf01_smoke100.json
 SPARK_GRAFT_SF_DIR="$SF10" SPARK_GRAFT_CPUS=32 SPARK_GRAFT_ONLY="$QUERIES" \
-  $RUN -Xmx48g graft.Bench 2>/tmp/sf10_smoke_gc.log | grep -v '"queries_n"' | grep -m1 '"metric":"total"' > /tmp/sf10_smoke.json
+  tools/engine_java.sh 48g graft.Bench 2>/tmp/sf10_smoke_gc.log | grep -v '"queries_n"' | grep -m1 '"metric":"total"' > /tmp/sf10_smoke.json
 # POST-run precheck (r15, the run_sf1_guarded.sh protocol): the smoke takes
 # ~25 min and the START precheck cannot see a mid-run host-degradation
 # stretch — the first r15 attempt recorded q_pipe_dsir at 166 s / simhash

@@ -7,17 +7,8 @@
 set -e
 cd /root/repo
 SF1=${1:-/dev/shm/graft/sf1}
-ADD_OPENS=""
-for p in java.lang java.lang.invoke java.lang.reflect java.io java.net java.nio \
-         java.util java.util.concurrent java.util.concurrent.atomic; do
-  ADD_OPENS="$ADD_OPENS --add-opens java.base/$p=ALL-UNNAMED"
-done
-for p in sun.nio.ch sun.nio.cs sun.security.action sun.util.calendar; do
-  ADD_OPENS="$ADD_OPENS --add-opens java.base/$p=ALL-UNNAMED"
-done
-RUN="java $ADD_OPENS -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC -Dspark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold=64MB -cp target/scala-2.13/classes:/opt/spark/jars/*"
 if [ ! -d "$SF1/lineitem.parquet" ]; then
-  $RUN -Xmx8g graft.tools.ScaleGen /root/testdata/sf0.1 "$SF1" 10 1>&2
+  tools/engine_java.sh 8g graft.tools.ScaleGen /root/testdata/sf0.1 "$SF1" 10 1>&2
 fi
 # Host-stability gate (VERDICT r13 #1): refuse to record scale evidence in
 # a degraded window (r13's sf1 tail was recorded in one and is unusable).
@@ -27,7 +18,7 @@ tools/host_precheck.sh /tmp/sf1_precheck.json 1.3 || {
 }
 echo "precheck: $(cat /tmp/sf1_precheck.json)" >&2
 SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 SPARK_GRAFT_CPUS=32 \
-  $RUN -Xmx10g graft.Bench 2>/tmp/sf01_full_err.log | grep -v '"queries_n"' | grep -m1 '"metric":"total"' > /tmp/sf01_full.json
+  tools/engine_java.sh 10g graft.Bench 2>/tmp/sf01_full_err.log | grep -v '"queries_n"' | grep -m1 '"metric":"total"' > /tmp/sf01_full.json
 SPARK_GRAFT_SF_DIR="$SF1" SPARK_GRAFT_CPUS=32 \
-  $RUN -Xmx10g graft.Bench 2>/tmp/sf1_full_err.log | grep -v '"queries_n"' | grep -m1 '"metric":"total"' > /tmp/sf1_full.json
+  tools/engine_java.sh 10g graft.Bench 2>/tmp/sf1_full_err.log | grep -v '"queries_n"' | grep -m1 '"metric":"total"' > /tmp/sf1_full.json
 echo "done: /tmp/sf01_full.json /tmp/sf1_full.json"

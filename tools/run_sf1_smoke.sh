@@ -14,18 +14,9 @@ QUERIES="$QUERIES,q_graph_triangles,q_graph_jaccard_index,q_graph_adamic_adar,q_
 # session-2b: the directed clustering family + bipartite projections (the
 # newest join-heavy graph additions) — 49 total
 QUERIES="$QUERIES,q_graph_dir_lcc,q_graph_dir_census,q_graph_transforms,q_graph_bipartite"
-ADD_OPENS=""
-for p in java.lang java.lang.invoke java.lang.reflect java.io java.net java.nio \
-         java.util java.util.concurrent java.util.concurrent.atomic; do
-  ADD_OPENS="$ADD_OPENS --add-opens java.base/$p=ALL-UNNAMED"
-done
-for p in sun.nio.ch sun.nio.cs sun.security.action sun.util.calendar; do
-  ADD_OPENS="$ADD_OPENS --add-opens java.base/$p=ALL-UNNAMED"
-done
-RUN="java $ADD_OPENS -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC -cp target/scala-2.13/classes:/opt/spark/jars/*"
-$RUN -Xmx8g graft.tools.ScaleGen /root/testdata/sf0.1 "$SF1" 10 1>&2
+tools/engine_java.sh 8g graft.tools.ScaleGen /root/testdata/sf0.1 "$SF1" 10 1>&2
 SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 SPARK_GRAFT_CPUS=32 SPARK_GRAFT_ONLY="$QUERIES" \
-  $RUN -Xmx8g -verbose:gc graft.Bench 2>/tmp/sf01_smoke_gc.log | grep -v '"queries_n"' | grep -m1 '"metric":"total"' > /tmp/sf01_smoke.json
+  tools/engine_java.sh 8g -verbose:gc graft.Bench 2>/tmp/sf01_smoke_gc.log | grep -v '"queries_n"' | grep -m1 '"metric":"total"' > /tmp/sf01_smoke.json
 SPARK_GRAFT_SF_DIR="$SF1" SPARK_GRAFT_CPUS=32 SPARK_GRAFT_ONLY="$QUERIES" \
-  $RUN -Xmx8g -verbose:gc graft.Bench 2>/tmp/sf1_smoke_gc.log | grep -v '"queries_n"' | grep -m1 '"metric":"total"' > /tmp/sf1_smoke.json
+  tools/engine_java.sh 8g -verbose:gc graft.Bench 2>/tmp/sf1_smoke_gc.log | grep -v '"queries_n"' | grep -m1 '"metric":"total"' > /tmp/sf1_smoke.json
 echo "done: /tmp/sf01_smoke.json /tmp/sf1_smoke.json"

@@ -8,19 +8,8 @@ OUT=${2:-/tmp/verify_out}
 MAIN=${3:-graft.Verify}
 cd /root/repo
 sbt -batch compile 1>&2
-ADD_OPENS=""
-for p in java.lang java.lang.invoke java.lang.reflect java.io java.net java.nio \
-         java.util java.util.concurrent java.util.concurrent.atomic; do
-  ADD_OPENS="$ADD_OPENS --add-opens java.base/$p=ALL-UNNAMED"
-done
-for p in sun.nio.ch sun.nio.cs sun.security.action sun.util.calendar; do
-  ADD_OPENS="$ADD_OPENS --add-opens java.base/$p=ALL-UNNAMED"
-done
 # The H1-blocked queries (TpcdsVerbatim2Queries.h1Blocked) dump to a
 # sibling dir so check.py can prove rendered-multiset value equality
 # without polluting the driver-shaped outDir.
 export SPARK_GRAFT_EXCLUDED_OUT="${SPARK_GRAFT_EXCLUDED_OUT:-$OUT.excluded}"
-exec java $ADD_OPENS -Xmx8g \
-  -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC -Dspark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold=64MB \
-  -cp "target/scala-2.13/classes:/opt/spark/jars/*" \
-  "$MAIN" "$SF" "$OUT"
+exec tools/engine_java.sh 8g "$MAIN" "$SF" "$OUT"
